@@ -107,7 +107,7 @@ def test_incremental_update_broadcast_and_cogroup_agree(spark):
 
     from voz_spark import schemas
     from voz_spark.config import CrawlConfig
-    from voz_spark.rounds import CrawlEngine
+    from voz_spark.rounds import CrawlEngine, updated_bloom_cogroup
 
     cfg = CrawlConfig(n_bloom_shards=8, bloom_bits_per_shard=1 << 14, bloom_k=5)
     eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomupd-"), cfg=cfg)
@@ -139,7 +139,7 @@ def test_incremental_update_broadcast_and_cogroup_agree(spark):
     new_seen = spark.createDataFrame(pd.DataFrame({"url_hash": new_hashes}))
 
     bcast = {r["shard_id"]: bytes(r["bits"]) for r in eng._updated_bloom(new_seen, old_blobs).collect()}
-    cg = {r["shard_id"]: bytes(r["bits"]) for r in eng._updated_bloom_cogroup(new_seen, bloom_df).collect()}
+    cg = {r["shard_id"]: bytes(r["bits"]) for r in updated_bloom_cogroup(new_seen, bloom_df, cfg).collect()}
     assert bcast == cg
     assert set(cg) == {0, 1, 2, 3, 5}
     assert cg[0] == old_blobs[0] and cg[2] == old_blobs[2] and cg[3] == old_blobs[3]
@@ -216,3 +216,92 @@ def test_bloom_param_change_rebuilds_state(spark):
     # new manifests record the new layout
     meta = eng2.cat.manifest()["meta"]
     assert meta["bloom_n_shards"] == cfg2.n_bloom_shards
+
+
+def _assert_no_false_negatives(eng, bloom_df):
+    """Every committed seen URL reads maybe-seen against `bloom_df`."""
+    from pyspark.sql import functions as F
+
+    from voz_spark.frontier import _bloom_split_cogroup
+
+    seen = eng.seen().select("url_hash", "canon_url")
+    assert seen.count() > 0
+    memb = _bloom_split_cogroup(seen, bloom_df, eng.cfg)
+    assert memb.where(~F.col("maybe_seen")).count() == 0
+
+
+def test_resume_of_cuckoo_era_catalog_rebuilds_bloom(spark):
+    """A catalog last committed by an engine that kept a cuckoo seen
+    filter has `seen` rows but an empty `seen_bloom` file set (and
+    stale cuckoo state the engine no longer reads). Resuming it must
+    rebuild the bloom from the authoritative seen table — the
+    lit(False) empty-state path would skip the anti-join backstop —
+    and the finished crawl still matches the sequential simulator."""
+    import tempfile
+
+    from voz_spark.oracle_sim import simulate
+    from voz_spark.rounds import CrawlEngine
+
+    wd = tempfile.mkdtemp(prefix="cuckooera-")
+    eng = CrawlEngine(spark, wd, n_seeds=5, n_images=150)
+    eng.bootstrap()
+    eng.run_round()
+    eng.run_round()
+    cat = eng.cat
+    man = cat.manifest()
+    stale = spark.createDataFrame(
+        [(0, 4, 0, b"\x00" * 16)], "shard_id int, n_buckets int, n_keys long, table binary"
+    )
+    cat.commit(
+        replaces={"seen_bloom": [], "seen_cuckoo": cat.write_files(stale, "seen_cuckoo")},
+        meta={**man["meta"], "seen_filter": "cuckoo"},
+    )
+    man = cat.manifest()
+    assert man["tables"]["seen"] and man["tables"]["seen_bloom"] == []
+
+    eng2 = CrawlEngine(spark, wd, n_seeds=5, n_images=150)
+    _assert_no_false_negatives(eng2, eng2._validated_bloom_table())
+
+    eng2.run()
+    sim = simulate(n_seeds=5, n_images=150)
+    assert eng2.schedule_order() == sim.schedule
+    assert {r.canon_url for r in eng2.seen().collect()} == sim.seen
+    man = eng2.cat.manifest()
+    assert man["tables"]["seen_bloom"]
+    assert "seen_filter" not in man["meta"]
+
+
+def test_engine_reopen_recrawls_urls(spark):
+    """Recrawl story end-to-end: reopened URLs leave `seen`, the bloom
+    is rebuilt without them (and without false negatives over what
+    stays), they re-enter the frontier with their original priority
+    fields, and the next run fetches them AGAIN (one extra results row
+    each); every other URL stays crawled-once."""
+    import tempfile
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from voz_spark import schemas
+    from voz_spark.rounds import CrawlEngine
+
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="reopen-"), n_seeds=5, n_images=150)
+    eng.run()
+    threads = sorted(
+        {r.canon_url for r in eng.results().where(F.col("kind") == "thread").collect()}
+    )
+    targets = threads[:3]
+    seen_before = {r.canon_url for r in eng.seen().collect()}
+    st = eng.reopen(spark.createDataFrame([(u,) for u in targets], "canon_url string"))
+    assert st["n_reopened"] == len(targets)
+    seen_mid = {r.canon_url for r in eng.seen().collect()}
+    assert seen_mid == seen_before - set(targets)
+    _assert_no_false_negatives(eng, eng._read("seen_bloom", schemas.SEEN_BLOOM))
+
+    eng.run()  # fetches exactly the reopened URLs, then drains
+    assert {r.canon_url for r in eng.seen().collect()} == seen_before
+    counts = Counter(r.canon_url for r in eng.results().collect())
+    for u in targets:
+        assert counts[u] == 2, (u, counts[u])
+    untouched = [u for u in threads if u not in targets]
+    assert all(counts[u] == 1 for u in untouched)

@@ -269,3 +269,32 @@ def test_q268_greedy_coverage_replay(spark, sf_dir):
     # greedy marginal gains are non-increasing (submodularity)
     gains = [w[2] for w in want]
     assert gains == sorted(gains, reverse=True)
+
+
+def test_q268_stops_when_coverage_saturates(spark, tmp_path):
+    """Every later doc's trigrams are a subset of the first doc's, so
+    coverage saturates after round 1, before _Q268_K rounds: the greedy
+    loop stops there, with the DuckDB oracle's row set."""
+    from voz_spark.extras_r5 import _Q268_K
+    from voz_spark.oracle_compare import compare
+    from voz_spark.registry import all_oracles
+
+    texts = ["a b c d e f g h", "a b c d", "c d e f", "f g h", "x y"]
+    pd.DataFrame(
+        {
+            "doc_id": pd.Series(range(len(texts)), dtype="int64"),
+            "text": texts,
+            "lang": "en",
+            "source": "src0",
+            "n_chars": pd.Series([len(t) for t in texts], dtype="int64"),
+        }
+    ).to_parquet(tmp_path / "documents.parquet", index=False)
+    sf = str(tmp_path)
+    name = "q268_greedy_coverage_selection"
+    got = all_queries()[name](spark, sf)
+    rows = [(r.round, r.doc_id, r.n_new_shingles, r.covered_total) for r in got.collect()]
+    assert len(rows) < _Q268_K
+    assert rows == [(1, 0, 6, 6)]
+    ok, msg = compare(got, all_oracles()[name], sf)
+    release_caches(spark)
+    assert ok, msg

@@ -21,7 +21,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from voz_spark import bloom as B
+from voz_spark import schemas
 from voz_spark.config import DEFAULT, CrawlConfig
 from voz_spark.frontier import (
     _bloom_split,
@@ -32,6 +32,7 @@ from voz_spark.frontier import (
     _robots_flag,
     _schedule,
 )
+from voz_spark.rounds import updated_bloom_cogroup
 from voz_spark.synth import DOMINANT_IMG_HOST, MINOR_IMG_HOSTS, robots_rules
 
 
@@ -56,52 +57,18 @@ def _url_expr() -> F.Column:
 
 
 def _build_membership(spark: SparkSession, seen, cfg: CrawlConfig):
-    """Build seen-filter state (bloom or cuckoo) from `seen` with the
-    engine's distributed build paths and return the membership
-    splitter. Shared by BOTH benchmark jobs so the full round pays the
-    same real prefilter + anti-join the scheduling job does; the build
-    itself stays OUTSIDE the timed window — the metric is per-round
-    membership + scheduling cost, not one-time state construction."""
-    import pandas as pd
+    """Build bloom state from `seen` with the engine's distributed
+    build path and return the membership splitter. Shared by BOTH
+    benchmark jobs so the full round pays the same real prefilter +
+    anti-join the scheduling job does; the build itself stays OUTSIDE
+    the timed window — the metric is per-round membership + scheduling
+    cost, not one-time state construction."""
+    empty = spark.createDataFrame([], schemas.SEEN_BLOOM)
+    blob_rows = updated_bloom_cogroup(seen.select("url_hash"), empty, cfg).collect()
+    shard_blobs = {int(r.shard_id): bytes(r.bits) for r in blob_rows}
 
-    nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
-
-    if cfg.seen_filter == "cuckoo":
-        from voz_spark import cuckoo_state as CS
-
-        cstate = CS.build_from_seen(seen.select("url_hash"), n_shards)
-        cblobs = CS.blobs_from(cstate)
-
-        def membership(df):
-            return CS.split_broadcast(spark, df, cblobs, n_shards)
-
-    else:
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-
-            sid = int(pdf["shard_id"].iloc[0])
-            bits = B.empty_shard(nbits)
-            B.add_hashes(bits, pdf["url_hash"].to_numpy().astype(np.uint64), nbits, k)
-            return pd.DataFrame(
-                [{"shard_id": sid, "nbits": nbits, "k": k, "bits": bits.tobytes()}]
-            )
-
-        from voz_spark import schemas
-
-        blob_rows = (
-            seen.select(
-                F.pmod("url_hash", F.lit(n_shards)).cast("int").alias("shard_id"),
-                "url_hash",
-            )
-            .groupBy("shard_id")
-            .applyInPandas(build, schemas.SEEN_BLOOM)
-            .collect()
-        )
-        shard_blobs = {int(r.shard_id): bytes(r.bits) for r in blob_rows}
-
-        def membership(df):
-            return _bloom_split(spark, df, shard_blobs, cfg)
+    def membership(df):
+        return _bloom_split(spark, df, shard_blobs, cfg)
 
     return membership
 
@@ -211,7 +178,6 @@ def bench_frontier_schedule(
         "n_urls": n_urls,
         "n_seen_preloaded": n_seen,
         "n_scheduled": n_scheduled,
-        "seen_filter": cfg.seen_filter,
         "seen_store": cfg.seen_store,
         "wall_sec": round(wall, 3),
         "urls_per_sec": round(n_urls / wall, 1),

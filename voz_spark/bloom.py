@@ -14,6 +14,12 @@ own blob (``applyInPandas``), which on a cluster co-locates with a
 small enough that a broadcast map is used for the scalar-UDF fast
 path as well.
 
+This is the engine's only URL-seen filter. A cuckoo filter (deletable,
+lower FPR) tied it on membership probes but made crawl rounds ~33%
+slower in a same-box A/B, all in its per-round state update; the one
+consumer of deletion, ``CrawlEngine.reopen``, rebuilds the affected
+bloom from ``seen`` instead.
+
 Correctness contract (SURVEY §5.2 item 4): NO false negatives ever —
 bloom "definitely unseen" rows skip the exact anti-join; "maybe seen"
 rows always go through the exact anti-join on (url_hash, canon_url),

@@ -46,6 +46,7 @@ class CrawlConfig:
     # the expected seen-set. 2^20 bits/shard for tests; the 10^10 design
     # point is 2^27 bits × 4096 shards ≈ 64 GiB total, ~1% FPR with k=7
     # (never broadcast whole — membership is tested shard-aligned).
+    # The engine's only URL-seen filter (why not cuckoo: bloom.py header).
     n_bloom_shards: int = 64
     bloom_bits_per_shard: int = 1 << 20
     bloom_k: int = 5
@@ -54,31 +55,6 @@ class CrawlConfig:
     # aligned via cogroup against the bloom table (no broadcast) — the
     # only viable strategy at the 10^10 design point's ~64 GiB state.
     bloom_broadcast_max_bytes: int = 64 << 20
-    # seen-filter strategy (BASELINE.json north_star: "bloom/cuckoo
-    # URL-seen filter"). "bloom" = fixed-size bitmap shards (engine
-    # default; ~13 bits/key, inserts only). "cuckoo" = fingerprint
-    # tables (voz_spark/cuckoo.py; ~16 bits/key) with O(1) DELETION,
-    # so recrawl/expiry (CrawlEngine.reopen) shrinks the filter in
-    # place instead of rebuilding every touched shard from `seen`.
-    # Both use the same pmod(url_hash, n_bloom_shards) shard routing
-    # and the same broadcast/cogroup membership dispatch; schedule
-    # parity bloom≡cuckoo is test-pinned, and the driver bench runs
-    # cuckoo as its headline path (bench.py; it has measured faster in
-    # every driver and local snapshot since r2).
-    # 10^10 design-point trade (why both stay first-class):
-    #   bloom : 2^27 bits × 4096 shards ≈ 64 GiB, k=7 → ~1% FPR at
-    #           ~13 bits/key; cannot delete — recrawl/expiry rebuilds
-    #           every touched shard from the seen table.
-    #   cuckoo: 16-bit fingerprints, 4-slot buckets at ≤95% target
-    #           occupancy ≈ 16.8 bits/key → ~20 GiB per 10^10 keys;
-    #           FPR ≈ 2b/2^f = 8/65536 ≈ 0.012% (b=4 slots, f=16-bit
-    #           tags) — ~80× lower than bloom at ~1.3× the memory —
-    #           and O(1) in-place deletes keep long-run state bounded.
-    #           Past ~95% occupancy inserts start failing (cuckoo
-    #           eviction loops), so shards are sized with that
-    #           headroom; membership cost is the same numpy probe of
-    #           2 buckets vs bloom's k=7 bit tests.
-    seen_filter: str = "bloom"
     # exact-anti-join seen storage. "plain": read the catalog's seen
     # parquet files directly — the anti-join then shuffles BOTH sides
     # on (url_hash, canon_url) every round, i.e. a full exchange of the

@@ -381,8 +381,8 @@ FROM per_doc GROUP BY source ORDER BY source
 )
 def q264_rare_token_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source junk audit: docs whose out-of-top-K-vocab token
-    share exceeds 40% are rejected; vocab is the broadcast TakeOrdered
-    top-K."""
+    share exceeds _Q264_REJECT_MILLI per mille are rejected; vocab is
+    the broadcast TakeOrdered top-K."""
     tok = T(spark, sf_dir, "documents").select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("token")
     )
@@ -683,6 +683,9 @@ def q267_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_ab").cast("long").alias("n_ab"),
             F.expr("1000 * n_ab div n_orders").cast("long").alias("support_milli"),
             F.expr("1000 * n_ab div n_ant").cast("long").alias("confidence_milli"),
+            # bigint on both engines: 1000000 * n_ab * n_orders wraps
+            # past 2^63, so lift is exact only while
+            # n_ab * n_orders < 9.2e12
             F.expr("1000000 * n_ab * n_orders div (n_ant * n_con)")
             .cast("long")
             .alias("lift_micro"),
@@ -799,13 +802,18 @@ def q268_greedy_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFram
         nov = tri if covered is None else tri.join(
             F.broadcast(covered), "g", "left_anti"
         )
-        win = (
+        top = (
             nov.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_new"))
             .orderBy(F.desc("n_new"), "doc_id")
             .limit(1)
-            .collect()[0]
+            .collect()
         )
+        if not top:
+            # coverage saturated: every trigram is covered, and the
+            # oracle's later rounds are empty too
+            break
+        win = top[0]
         win_tris = tri.where(F.col("doc_id") == win.doc_id).select("g")
         covered = (
             win_tris if covered is None else covered.unionByName(win_tris)

@@ -589,26 +589,20 @@ def run_round_pipeline(
     round_id: int,
     img_space: int,
     bloom_df: DataFrame | None = None,
-    seen_split=None,
 ) -> RoundResult:
     """Execute one crawl round; returns the new state DataFrames
-    (nothing committed here — rounds.commit_round persists atomically).
-
-    ``seen_split`` overrides the membership prefilter: a callable
-    ``df -> df + maybe_seen`` (the cuckoo strategy plugs in here —
-    rounds.CrawlEngine builds it from cfg.seen_filter). Default is the
-    bloom dispatch. Any strategy keeps the same contract: no false
-    negatives; maybe_seen rows pass the exact anti-join backstop."""
+    (nothing committed here — rounds.CrawlEngine.run_round commits
+    them atomically). Membership is the bloom prefilter
+    (`_bloom_split`: broadcast `shard_blobs`, or a shard-aligned
+    cogroup against `bloom_df`); its contract is no false negatives,
+    and maybe_seen rows pass the exact anti-join backstop."""
     persisted: list[DataFrame] = []
 
     cand = _host_path(_dedup_in_batch(_canonicalize(frontier)))
     # persist before the membership fork: both the definitely-new branch
     # and the anti-join branch read this, and without a persist each
     # branch would re-run the canonicalization + dedup + membership UDF
-    if seen_split is None:
-        cand = _bloom_split(spark, cand, shard_blobs, cfg, bloom_df=bloom_df).persist()
-    else:
-        cand = seen_split(cand).persist()
+    cand = _bloom_split(spark, cand, shard_blobs, cfg, bloom_df=bloom_df).persist()
     persisted.append(cand)
     new = _dedup_against_seen(cand, seen)
     new = _robots_flag(new, robots_rules)

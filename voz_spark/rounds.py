@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from voz_spark import bloom as B
-from voz_spark import cuckoo_state as CS
 from voz_spark import schemas, synth
 from voz_spark.config import DEFAULT, CrawlConfig
 from voz_spark.frontier import run_round_pipeline
@@ -54,6 +53,46 @@ def generate_images(spark: SparkSession, path: str, n_images: int) -> None:
         .mapInPandas(gen, schemas.IMAGES)
         .write.mode("overwrite")
         .parquet(path)
+    )
+
+
+def updated_bloom_cogroup(
+    new_seen: DataFrame, bloom_df: DataFrame, cfg: CrawlConfig
+) -> DataFrame:
+    """Incremental bloom shard rebuild with NO driver collect and NO
+    broadcast — the 10^10 path (state is ~64 GiB there; neither a
+    driver collect of the blobs nor a broadcast is possible). New
+    hashes and existing blob rows cogroup per shard; Spark's cogroup
+    has full-outer semantics, so shards that received no new hashes
+    appear as blob-only groups and pass through unchanged, and
+    brand-new shards appear as hash-only groups and build from empty.
+    With an empty `bloom_df` this is the full build from `seen`.
+    Bit-equivalence with the broadcast path is pinned in
+    tests/test_bloom.py."""
+    nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
+
+    def update(hashes_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(hashes_pdf) == 0:
+            return blob_pdf[["shard_id", "nbits", "k", "bits"]]
+        sid = int(hashes_pdf["shard_id"].iloc[0])
+        bits = (
+            np.frombuffer(blob_pdf["bits"].iloc[0], dtype=np.uint8).copy()
+            if len(blob_pdf)
+            else B.empty_shard(nbits)
+        )
+        B.add_hashes(bits, hashes_pdf["url_hash"].to_numpy().astype(np.uint64), nbits, k)
+        return pd.DataFrame(
+            [{"shard_id": sid, "nbits": nbits, "k": k, "bits": bits.tobytes()}]
+        )
+
+    new = new_seen.select(
+        F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard_id"),
+        "url_hash",
+    )
+    return (
+        new.groupBy("shard_id")
+        .cogroup(bloom_df.groupBy("shard_id"))
+        .applyInPandas(update, schemas.SEEN_BLOOM)
     )
 
 
@@ -170,7 +209,6 @@ class CrawlEngine:
         shard count and silently re-crawl seen URLs."""
         cfg = self.cfg
         return {
-            "seen_filter": cfg.seen_filter,
             "bloom_n_shards": cfg.n_bloom_shards,
             "bloom_bits_per_shard": cfg.bloom_bits_per_shard,
             "bloom_k": cfg.bloom_k,
@@ -186,11 +224,11 @@ class CrawlEngine:
         bloom_table = self._read("seen_bloom", schemas.SEEN_BLOOM)
         if not man["tables"].get("seen_bloom"):
             if man["tables"].get("seen"):
-                # seen exists but no bloom state (the crawl previously
-                # ran under seen_filter="cuckoo"): rebuild, or the
-                # lit(False) fast path would skip the anti-join backstop
-                empty = self.spark.createDataFrame([], schemas.SEEN_BLOOM)
-                return self._updated_bloom_cogroup(self.seen().select("url_hash"), empty)
+                # seen exists but no bloom state (e.g. a catalog last
+                # committed by an engine that kept a cuckoo filter
+                # instead): rebuild, or the lit(False) fast path would
+                # skip the anti-join backstop
+                return self._rebuilt_bloom()
             return bloom_table  # empty state: nothing to validate
         meta = man["meta"]
         stored = (
@@ -199,12 +237,16 @@ class CrawlEngine:
             meta.get("bloom_k"),
         )
         cfg = self.cfg
-        current = (cfg.n_bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_k)
-        # old manifests predate the seen_filter key: they were bloom
-        if stored == current and meta.get("seen_filter", "bloom") == "bloom":
+        if stored == (cfg.n_bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_k):
             return bloom_table
+        return self._rebuilt_bloom()
+
+    def _rebuilt_bloom(self, seen: DataFrame | None = None) -> DataFrame:
+        """Bloom state built from scratch over `seen` (default: the
+        committed seen table)."""
+        seen = self.seen() if seen is None else seen
         empty = self.spark.createDataFrame([], schemas.SEEN_BLOOM)
-        return self._updated_bloom_cogroup(self.seen().select("url_hash"), empty)
+        return updated_bloom_cogroup(seen.select("url_hash"), empty, self.cfg)
 
     def _bloom_blobs_from(self, bloom_df: DataFrame) -> dict[int, bytes]:
         rows = bloom_df.collect()
@@ -260,68 +302,6 @@ class CrawlEngine:
             return touched.unionByName(keep)
         return touched
 
-    def _updated_bloom_cogroup(self, new_seen: DataFrame, bloom_df: DataFrame) -> DataFrame:
-        """Incremental shard rebuild with NO driver collect and NO
-        broadcast — the 10^10 path (state is ~64 GiB there; neither
-        `_bloom_blobs()` nor a broadcast is possible). New hashes and
-        existing blob rows cogroup per shard; Spark's cogroup has
-        full-outer semantics, so shards that received no new hashes
-        appear as blob-only groups and pass through unchanged, and
-        brand-new shards appear as hash-only groups and build from
-        empty. Bit-equivalence with the broadcast path is pinned in
-        tests/test_bloom.py."""
-        cfg = self.cfg
-        nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
-
-        def update(hashes_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(hashes_pdf) == 0:
-                return blob_pdf[["shard_id", "nbits", "k", "bits"]]
-            sid = int(hashes_pdf["shard_id"].iloc[0])
-            bits = (
-                np.frombuffer(blob_pdf["bits"].iloc[0], dtype=np.uint8).copy()
-                if len(blob_pdf)
-                else B.empty_shard(nbits)
-            )
-            B.add_hashes(bits, hashes_pdf["url_hash"].to_numpy().astype(np.uint64), nbits, k)
-            return pd.DataFrame(
-                [{"shard_id": sid, "nbits": nbits, "k": k, "bits": bits.tobytes()}]
-            )
-
-        new = new_seen.select(
-            F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard_id"),
-            "url_hash",
-        )
-        return (
-            new.groupBy("shard_id")
-            .cogroup(bloom_df.groupBy("shard_id"))
-            .applyInPandas(update, schemas.SEEN_BLOOM)
-        )
-
-    def _validated_cuckoo_table(self) -> DataFrame:
-        """The committed cuckoo state, REBUILT from `seen` when the
-        stored state is absent (e.g. the crawl previously ran under
-        seen_filter="bloom") or was written under a different shard
-        count. Unlike the bloom, per-shard table geometry (n_buckets)
-        is self-describing on each blob row, so only the shard-routing
-        parameter and the filter kind need validating."""
-        man = self.cat.manifest()
-        state = self._read("seen_cuckoo", CS.SEEN_CUCKOO)
-        if not man["tables"].get("seen_cuckoo"):
-            if man["tables"].get("seen"):
-                return CS.build_from_seen(
-                    self.seen().select("url_hash"), self.cfg.n_bloom_shards
-                )
-            return state  # empty state: nothing to validate
-        meta = man["meta"]
-        if (
-            meta.get("seen_filter") == "cuckoo"
-            and meta.get("bloom_n_shards") == self.cfg.n_bloom_shards
-        ):
-            return state
-        return CS.build_from_seen(
-            self.seen().select("url_hash"), self.cfg.n_bloom_shards
-        )
-
     def _bloom_state_is_broadcastable(self) -> bool:
         """Static criterion (no collect needed): full-capacity state
         size vs the broadcast ceiling."""
@@ -336,44 +316,18 @@ class CrawlEngine:
         seen = self.seen()
         images = self.spark.read.schema(schemas.IMAGES).parquet(self.images_path)
         tables = self.cat.manifest()["tables"]
-        has_seen = bool(tables.get("seen"))
-        cuckoo_state = None
-        seen_split = None
-        if self.cfg.seen_filter == "cuckoo":
-            n_shards = self.cfg.n_bloom_shards
-            cuckoo_state = self._validated_cuckoo_table().persist()
-            if not has_seen:
-                # empty state (round 1): free lit(False) membership path
-                seen_split = lambda d: d.withColumn("maybe_seen", F.lit(False))  # noqa: E731
-            else:
-                total = (
-                    cuckoo_state.select(F.sum(F.length("table")).alias("b")).first()["b"]
-                    or 0
-                )
-                if total <= self.cfg.bloom_broadcast_max_bytes:
-                    cblobs = CS.blobs_from(cuckoo_state)
-                    seen_split = lambda d: CS.split_broadcast(  # noqa: E731
-                        self.spark, d, cblobs, n_shards
-                    )
-                else:
-                    seen_split = lambda d: CS.split_cogroup(  # noqa: E731
-                        d, cuckoo_state, n_shards
-                    )
-            blobs: dict[int, bytes] = {}
-            bloom_table = None
-        else:
-            has_bloom_state = bool(tables.get("seen_bloom")) or has_seen
-            bloom_table = self._validated_bloom_table()
-            broadcastable = self._bloom_state_is_broadcastable()
-            blobs = (
-                self._bloom_blobs_from(bloom_table)
-                if (broadcastable and has_bloom_state)
-                else {}
-            )
-            # empty state (round 1 of every crawl) takes the free
-            # lit(False) membership path — never a cogroup shuffle
-            # against an empty bloom table
-            bloom_table = bloom_table if has_bloom_state else None
+        has_bloom_state = bool(tables.get("seen_bloom")) or bool(tables.get("seen"))
+        bloom_table = self._validated_bloom_table()
+        broadcastable = self._bloom_state_is_broadcastable()
+        blobs = (
+            self._bloom_blobs_from(bloom_table)
+            if (broadcastable and has_bloom_state)
+            else {}
+        )
+        # empty state (round 1 of every crawl) takes the free
+        # lit(False) membership path — never a cogroup shuffle
+        # against an empty bloom table
+        bloom_table = bloom_table if has_bloom_state else None
         # the exact-anti-join side of seen: the bucketed index (no
         # seen-side exchange) when configured, else the catalog files
         seen_for_anti = self.seen_idx.sync(self.cat) if self.seen_idx else seen
@@ -389,25 +343,18 @@ class CrawlEngine:
             round_id,
             self.img_space,
             bloom_df=bloom_table,
-            seen_split=seen_split,
         )
-        if self.cfg.seen_filter == "cuckoo":
-            filter_name = "seen_cuckoo"
-            filter_df = CS.updated(
-                seen.select("url_hash").unionByName(rr.new_seen_df.select("url_hash")),
-                rr.new_seen_df.select("url_hash"),
-                cuckoo_state,
-                self.cfg.n_bloom_shards,
+        next_bloom = (
+            self._updated_bloom(rr.new_seen_df, blobs)
+            if broadcastable
+            else updated_bloom_cogroup(
+                rr.new_seen_df,
+                bloom_table
+                if bloom_table is not None
+                else self._read("seen_bloom", schemas.SEEN_BLOOM),
+                self.cfg,
             )
-        else:
-            filter_name = "seen_bloom"
-            filter_df = (
-                self._updated_bloom(rr.new_seen_df, blobs)
-                if broadcastable
-                else self._updated_bloom_cogroup(rr.new_seen_df, bloom_table
-                                                 if bloom_table is not None
-                                                 else self._read("seen_bloom", schemas.SEEN_BLOOM))
-            )
+        )
         # A12: permanent failures only — retried URLs went back into
         # rr.next_frontier_df with attempt+1 (the union-back lives in
         # run_round_pipeline so the simulator semantics stay in one place)
@@ -436,14 +383,9 @@ class CrawlEngine:
         fail_files = self.cat.write_files(failures, "fetch_failures")
         if fail_files:
             appends["fetch_failures"] = fail_files
-        # the inactive filter's table is replaced with an empty file set:
-        # switching strategies mid-crawl must not leave stale state that
-        # a later switch-back would trust under the wrong routing
-        other_filter = "seen_bloom" if filter_name == "seen_cuckoo" else "seen_cuckoo"
         replaces = {
             "frontier": self.cat.write_files(rr.next_frontier_df, "frontier"),
-            filter_name: self.cat.write_files(filter_df, filter_name),
-            other_filter: [],
+            "seen_bloom": self.cat.write_files(next_bloom, "seen_bloom"),
         }
         self.cat.commit(
             appends=appends,
@@ -451,8 +393,6 @@ class CrawlEngine:
             meta={"round_id": round_id, **self._bloom_params_meta()},
         )
         rr.unpersist()
-        if cuckoo_state is not None:
-            cuckoo_state.unpersist()
         return {
             "round_id": round_id,
             "n_candidates": rr.n_candidates,
@@ -467,7 +407,7 @@ class CrawlEngine:
     def reopen(self, urls: DataFrame) -> dict:
         """Make already-crawled URLs crawlable again (recrawl of a
         stale host, cache expiry, deletion requests): remove them from
-        `seen`, remove their fingerprints from the seen filter, and
+        `seen`, rebuild the bloom from the remaining seen rows, and
         re-enter them into the frontier with their ORIGINAL priority
         fields so the next round fetches them in the right order.
 
@@ -475,10 +415,10 @@ class CrawlEngine:
         thread crawlable again on the next run
         (src/thread_crawler.py:46-59).
 
-        Filter cost asymmetry (why cfg.seen_filter="cuckoo" exists):
-        the cuckoo path deletes fingerprints IN PLACE (O(1) per URL,
-        only touched shards rewritten); the bloom path cannot unset
-        bits and must rebuild the filter from the remaining seen rows.
+        A bloom cannot unset bits, so the filter is rebuilt (one
+        distributed cogroup pass over `seen`); reopen is an operator
+        action, not per-round traffic, so the engine keeps no
+        deletable filter for it.
 
         ``urls``: a DataFrame with a ``canon_url`` column. Returns the
         number of URLs actually reopened.
@@ -509,26 +449,13 @@ class CrawlEngine:
             )
         )
         next_frontier = self.frontier().unionByName(refetch)
-        if self.cfg.seen_filter == "cuckoo":
-            filter_name = "seen_cuckoo"
-            filter_df = CS.deleted(
-                removed.select("url_hash"),
-                self._validated_cuckoo_table(),
-                self.cfg.n_bloom_shards,
-            )
-        else:
-            filter_name = "seen_bloom"
-            empty = self.spark.createDataFrame([], schemas.SEEN_BLOOM)
-            filter_df = self._updated_bloom_cogroup(
-                remaining.select("url_hash"), empty
-            )
-        other_filter = "seen_bloom" if filter_name == "seen_cuckoo" else "seen_cuckoo"
         self.cat.commit(
             replaces={
                 "seen": self.cat.write_files(remaining, "seen"),
                 "frontier": self.cat.write_files(next_frontier, "frontier"),
-                filter_name: self.cat.write_files(filter_df, filter_name),
-                other_filter: [],
+                "seen_bloom": self.cat.write_files(
+                    self._rebuilt_bloom(remaining), "seen_bloom"
+                ),
             },
             meta={"round_id": self.last_round(), **self._bloom_params_meta()},
         )

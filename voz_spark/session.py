@@ -10,6 +10,8 @@ configured identically everywhere:
   re-plans from runtime stats.
 - Arrow on for pandas UDF / mapInPandas exchange (the only Python that
   ever runs on the hot path is Arrow-batched).
+- driver heap sized from the host's RAM (:func:`driver_heap`);
+  ``SPARK_GRAFT_DRIVER_MEM`` overrides it.
 - shuffle partitions default to the core count locally; on a real
   cluster this is overridden by spark-submit conf (we only set it if
   the caller didn't).
@@ -24,6 +26,31 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def host_mem_bytes(meminfo: str = "/proc/meminfo") -> int | None:
+    """MemTotal of the host in bytes, or None where it can't be read."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) * 1024  # reported in kB
+    except (OSError, ValueError, IndexError):
+        pass
+    return None
+
+
+def driver_heap(mem_bytes: int | None) -> str:
+    """Driver heap for a local session: half the host's RAM, capped at
+    32g and floored at 1g. In local mode the driver JVM runs every task,
+    so it holds the whole working set — but Python workers, page cache
+    and Arrow buffers live outside the heap, and a heap sized past RAM
+    gets the JVM OOM-killed instead of spilling. Unknown RAM keeps the
+    32g cap."""
+    if mem_bytes is None:
+        return "32g"
+    mb = min(32 << 10, max(1 << 10, mem_bytes // 2 >> 20))
+    return f"{mb}m"
 
 
 def get_spark(
@@ -71,7 +98,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_heap(host_mem_bytes()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # zstd shuffle/spill codec: at high parallelism this box (and a

@@ -279,7 +279,7 @@ def q54_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream with unbounded keys bounds state with
     `dropDuplicatesWithinWatermark` instead (keys can then re-emit
     after eviction — exactly why the CRAWL keeps its seen state in a
-    table + bloom/cuckoo filter with no TTL rather than in stream
+    table + bloom filter with no TTL rather than in stream
     state; SURVEY §2.E)."""
     stream = events_stream(spark, sf_dir).dropDuplicates(["user_id", "event_type"])
     sink = run_to_memory(
