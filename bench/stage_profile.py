@@ -15,7 +15,11 @@ broadcast collection, cache materialization barriers) show up as
 job-gap time.
 
 Usage: python bench/stage_profile.py [--urls 16000000] [--pairs 6 24]
-       [--no-persist-cand] [--no-persist-stage1]
+       [--no-persist-cand] [--no-persist-stage1] [--out PATH]
+
+The shuffle-bytes sidecar goes to --out (default
+BENCH/stage_profile_latest.json, not committed); pass
+--out BENCH/stage_profile_r4.json to refresh the committed baseline.
 """
 
 from __future__ import annotations
@@ -176,6 +180,11 @@ def main() -> None:
     ap.add_argument("--pairs", type=int, nargs=2, default=[6, 24])
     ap.add_argument("--no-persist-cand", action="store_true")
     ap.add_argument("--no-persist-stage1", action="store_true")
+    ap.add_argument(
+        "--out",
+        default=os.path.join(REPO, "BENCH", "stage_profile_latest.json"),
+        help="sidecar JSON path (default not committed)",
+    )
     args = ap.parse_args()
     levels = []
     for cpus in args.pairs:
@@ -212,10 +221,9 @@ def main() -> None:
             for sid, s in levels[0][2]["stages"].items()
         },
     }
-    out_path = os.path.join(REPO, "BENCH", "stage_profile_r4.json")
-    with open(out_path, "w") as fh:
+    with open(args.out, "w") as fh:
         json.dump(sidecar, fh, indent=1)
-    print(f"sidecar -> {out_path} ({sidecar['shuffle_bytes_per_url']} B/URL)")
+    print(f"sidecar -> {args.out} ({sidecar['shuffle_bytes_per_url']} B/URL)")
 
 
 if __name__ == "__main__":

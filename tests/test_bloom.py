@@ -97,31 +97,33 @@ def test_bloom_broadcast_and_cogroup_paths_agree(spark):
         assert bc[f"u{i}"]
 
 
-def test_incremental_update_broadcast_and_cogroup_agree(spark):
-    """The driver-collect/broadcast incremental rebuild and the
-    no-collect cogroup rebuild must produce bit-identical shard blobs,
-    including untouched (pass-through) and brand-new shards."""
-    import tempfile
-
+def test_incremental_cogroup_update_matches_numpy_build(spark):
+    """The engine's one bloom update (the no-collect cogroup rebuild)
+    must produce shard blobs bit-identical to ones built directly in
+    numpy from the old and new hashes, including untouched
+    (pass-through) and brand-new shards."""
     import pandas as pd
 
     from voz_spark import schemas
     from voz_spark.config import CrawlConfig
-    from voz_spark.rounds import CrawlEngine, updated_bloom_cogroup
+    from voz_spark.rounds import updated_bloom_cogroup
 
     cfg = CrawlConfig(n_bloom_shards=8, bloom_bits_per_shard=1 << 14, bloom_k=5)
-    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomupd-"), cfg=cfg)
+
+    def numpy_blobs(hashes, shards):
+        out = {}
+        for sid in shards:
+            bits = B.empty_shard(cfg.bloom_bits_per_shard)
+            sel = hashes[(hashes % cfg.n_bloom_shards) == sid]
+            B.add_hashes(bits, sel.astype(np.uint64), cfg.bloom_bits_per_shard, cfg.bloom_k)
+            out[sid] = bits.tobytes()
+        return out
 
     rng = np.random.default_rng(11)
     old_hashes = rng.integers(0, 2**63, 300, dtype=np.int64)
     # old state covers only shards 0..3 → shards 4..7 start empty
     old_hashes = old_hashes[(old_hashes % cfg.n_bloom_shards) < 4]
-    old_blobs = {}
-    for sid in range(4):
-        bits = B.empty_shard(cfg.bloom_bits_per_shard)
-        sel = old_hashes[(old_hashes % cfg.n_bloom_shards) == sid]
-        B.add_hashes(bits, sel.astype(np.uint64), cfg.bloom_bits_per_shard, cfg.bloom_k)
-        old_blobs[sid] = bits.tobytes()
+    old_blobs = numpy_blobs(old_hashes, range(4))
     bloom_df = spark.createDataFrame(
         pd.DataFrame(
             [
@@ -138,9 +140,9 @@ def test_incremental_update_broadcast_and_cogroup_agree(spark):
     )
     new_seen = spark.createDataFrame(pd.DataFrame({"url_hash": new_hashes}))
 
-    bcast = {r["shard_id"]: bytes(r["bits"]) for r in eng._updated_bloom(new_seen, old_blobs).collect()}
+    expected = numpy_blobs(np.concatenate([old_hashes, new_hashes]), (0, 1, 2, 3, 5))
     cg = {r["shard_id"]: bytes(r["bits"]) for r in updated_bloom_cogroup(new_seen, bloom_df, cfg).collect()}
-    assert bcast == cg
+    assert cg == expected
     assert set(cg) == {0, 1, 2, 3, 5}
     assert cg[0] == old_blobs[0] and cg[2] == old_blobs[2] and cg[3] == old_blobs[3]
     assert cg[1] != old_blobs[1]
@@ -236,7 +238,9 @@ def test_resume_of_cuckoo_era_catalog_rebuilds_bloom(spark):
     stale cuckoo state the engine no longer reads). Resuming it must
     rebuild the bloom from the authoritative seen table — the
     lit(False) empty-state path would skip the anti-join backstop —
-    and the finished crawl still matches the sequential simulator."""
+    and the finished crawl still matches the sequential simulator.
+    The resumed rounds drop the cuckoo files from the manifest, so
+    they become orphans once the old snapshots expire."""
     import tempfile
 
     from voz_spark.oracle_sim import simulate
@@ -252,8 +256,10 @@ def test_resume_of_cuckoo_era_catalog_rebuilds_bloom(spark):
     stale = spark.createDataFrame(
         [(0, 4, 0, b"\x00" * 16)], "shard_id int, n_buckets int, n_keys long, table binary"
     )
+    cuckoo_files = cat.write_files(stale, "seen_cuckoo")
+    assert cuckoo_files
     cat.commit(
-        replaces={"seen_bloom": [], "seen_cuckoo": cat.write_files(stale, "seen_cuckoo")},
+        replaces={"seen_bloom": [], "seen_cuckoo": cuckoo_files},
         meta={**man["meta"], "seen_filter": "cuckoo"},
     )
     man = cat.manifest()
@@ -269,6 +275,11 @@ def test_resume_of_cuckoo_era_catalog_rebuilds_bloom(spark):
     man = eng2.cat.manifest()
     assert man["tables"]["seen_bloom"]
     assert "seen_filter" not in man["meta"]
+    # the stale cuckoo state leaves the manifest with the first resumed
+    # round, so snapshot expiry makes its files reclaimable
+    assert not man["tables"].get("seen_cuckoo")
+    cat.expire_snapshots(keep_last=1)
+    assert set(cuckoo_files) <= set(cat.orphan_files(min_age_s=0))
 
 
 def test_engine_reopen_recrawls_urls(spark):

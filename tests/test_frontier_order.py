@@ -186,6 +186,61 @@ def test_checkpoints_advance(crawl):
     assert rounds == list(range(1, len(rounds) + 1))
 
 
+def test_round_counts_match_committed_state(spark):
+    """Every count a round reports is the committed truth: at each
+    round's version the checkpoint's n_frontier and n_seen_total equal
+    that version's frontier and seen row counts, and the dict run_round
+    returns equals the round's lineage funnel row."""
+    from voz_spark import schemas
+
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="crawl-counts-"), n_seeds=5, n_images=150)
+    stats = {st["round_id"]: st for st in eng.run()}
+    assert len(stats) >= 3
+    cat = eng.cat
+    round_of = {v: cat.manifest(v)["meta"]["round_id"] for v in range(1, cat.latest_version() + 1)}
+    versions = [v for v, r in round_of.items() if r > 0]
+    assert len(versions) == len(stats)
+
+    def read(table, schema, v):
+        return cat.read(spark, table, schema, version=v)
+
+    for v in versions:
+        r = round_of[v]
+        (ck,) = read("checkpoints", schemas.CHECKPOINTS, v).where(F.col("round_id") == r).collect()
+        assert ck.n_frontier == read("frontier", schemas.FRONTIER, v).count(), r
+        assert ck.n_seen_total == read("seen", schemas.SEEN, v).count(), r
+        assert stats[r]["n_next_frontier"] == ck.n_frontier
+    funnel = {f.round_id: f for f in eng.lineage().where(F.col("partition_id") == -1).collect()}
+    for r, st in stats.items():
+        f = funnel[r]
+        assert st == {
+            "round_id": r,
+            "n_candidates": f.n_candidates,
+            "n_new": f.n_bloom_new,
+            "n_robots_blocked": f.n_robots_blocked,
+            "n_scheduled": f.n_scheduled,
+            "n_fetched_ok": f.n_fetched,
+            "n_failed": f.n_failed,
+            "n_next_frontier": st["n_next_frontier"],
+        }, r
+        assert f.n_deduped == f.n_bloom_new
+
+
+def test_round_leaves_no_broadcast_temp_file(spark):
+    """A driver broadcast stays in a temp file until destroyed: a
+    round with bloom state (broadcast membership) must destroy its
+    broadcasts, or every round leaks the state's size on disk."""
+    import os
+
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="crawl-bcast-"), n_seeds=5, n_images=150)
+    eng.bootstrap()
+    eng.run_round()  # round 1 has no bloom state, hence no broadcast
+    tmp = spark.sparkContext._temp_dir
+    before = set(os.listdir(tmp))
+    eng.run_round()
+    assert set(os.listdir(tmp)) - before == set()
+
+
 def test_thread_limit_and_sticky_parity(spark):
     """A1 LIMIT + B7 sticky filter must match the simulator too."""
     wd = tempfile.mkdtemp(prefix="crawl-limit-")

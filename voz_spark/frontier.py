@@ -23,6 +23,13 @@ Scale design (10^10 frontier, 1000 executors):
 - Python runs only inside Arrow-batched pandas UDFs / mapInPandas
   (canonicalization, bloom bit tests, image decode) — zero per-row
   Python UDFs, zero RDD usage (BASELINE.json input_hint).
+
+Every plan runs once. The pipeline's single action collects the small
+per-(partition, host) lineage aggregate: it fills the persisted frames
+the commit writes read from, and the funnel counts are its column
+sums — no stage is counted by a standalone `count()`. The next
+frontier and new seen sizes are observed on their commit writes
+(rounds.CrawlEngine.run_round).
 """
 
 from __future__ import annotations
@@ -31,6 +38,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -61,6 +69,12 @@ RETRYABLE_STATUSES = ("fetch_error", "missing", "decode_error", "psnr_fail", "ca
 
 @dataclass
 class RoundResult:
+    """One round's uncommitted state. The counts are the round's
+    lineage funnel row (sums of the collected per-partition rows);
+    `lineage_df` is built from those same collected rows, so writing
+    it re-runs no stage. The next frontier's size is not here: it is
+    observed on the frontier write at commit."""
+
     round_id: int
     n_candidates: int
     n_deduped: int
@@ -69,7 +83,6 @@ class RoundResult:
     n_scheduled: int
     n_fetched_ok: int
     n_failed: int
-    n_next_frontier: int
     scheduled_df: DataFrame | None = None
     results_df: DataFrame | None = None
     new_seen_df: DataFrame | None = None
@@ -77,10 +90,16 @@ class RoundResult:
     lineage_df: DataFrame | None = None
     permanent_failures_df: DataFrame | None = None
     persisted: list[DataFrame] = field(default_factory=list)
+    broadcasts: list[Broadcast] = field(default_factory=list)
 
     def unpersist(self):
+        """Release the round's caches and broadcasts. A driver-side
+        broadcast keeps its pickled value in a temp file until it is
+        destroyed."""
         for df in self.persisted:
             df.unpersist()
+        for bc in self.broadcasts:
+            bc.destroy()
 
 
 # Fast-path detector: URLs this shape are PROVABLY fixed points of
@@ -258,6 +277,7 @@ def _bloom_split(
     shard_blobs: dict[int, bytes],
     cfg: CrawlConfig,
     bloom_df: DataFrame | None = None,
+    broadcasts: list[Broadcast] | None = None,
 ) -> DataFrame:
     """B3a: add `maybe_seen`. False → definitely unseen (skips the
     anti-join). Two physical strategies, same semantics:
@@ -268,6 +288,9 @@ def _bloom_split(
       shard-aligned cogroup against the bloom table, no broadcast
       (`_bloom_split_cogroup`). Callers can also force it by passing
       `bloom_df` with shard_blobs=None.
+
+    A broadcast made here is appended to `broadcasts`, for the caller
+    to destroy once the plan has run.
     """
     if bloom_df is not None and (
         not shard_blobs
@@ -277,6 +300,8 @@ def _bloom_split(
     if not shard_blobs:
         return df.withColumn("maybe_seen", F.lit(False))
     bc = spark.sparkContext.broadcast(shard_blobs)
+    if broadcasts is not None:
+        broadcasts.append(bc)
     nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
 
     @pandas_udf("boolean")
@@ -592,25 +617,27 @@ def run_round_pipeline(
 ) -> RoundResult:
     """Execute one crawl round; returns the new state DataFrames
     (nothing committed here — rounds.CrawlEngine.run_round commits
-    them atomically). Membership is the bloom prefilter
+    them atomically) and the funnel counts, from its one action, the
+    lineage collect (module docstring). Membership is the bloom prefilter
     (`_bloom_split`: broadcast `shard_blobs`, or a shard-aligned
     cogroup against `bloom_df`); its contract is no false negatives,
     and maybe_seen rows pass the exact anti-join backstop."""
     persisted: list[DataFrame] = []
+    broadcasts: list[Broadcast] = []
 
     cand = _host_path(_dedup_in_batch(_canonicalize(frontier)))
     # persist before the membership fork: both the definitely-new branch
     # and the anti-join branch read this, and without a persist each
     # branch would re-run the canonicalization + dedup + membership UDF
-    cand = _bloom_split(spark, cand, shard_blobs, cfg, bloom_df=bloom_df).persist()
+    cand = _bloom_split(
+        spark, cand, shard_blobs, cfg, bloom_df=bloom_df, broadcasts=broadcasts
+    ).persist()
     persisted.append(cand)
     new = _dedup_against_seen(cand, seen)
     new = _robots_flag(new, robots_rules)
     new = new.persist()
     persisted.append(new)
 
-    n_candidates = frontier.count()
-    n_deduped = n_new = new.count()
     blocked = _unpack_pri(new.where(F.col("robots_blocked")))
     # `path` and the spent robots flag have no consumer past this
     # point — dropping them here keeps ~25% of the string bytes out of
@@ -777,7 +804,9 @@ def run_round_pipeline(
         )
         .unionByName(blocked.select("url_hash", "canon_url"))
         .withColumn("first_round", F.lit(round_id))
+        .persist()  # read by the seen write and the bloom update
     )
+    persisted.append(new_seen)
 
     next_frontier = (
         pending.select(
@@ -792,40 +821,33 @@ def run_round_pipeline(
         .unionByName(retry_frontier)
     )
 
-    # lineage (B13): funnel counters per host + per-partition rows from
-    # each stage's OWN aggregation (every counter column is filled by
-    # the stage that produced it; per-partition rows sum to the funnel
-    # totals — pinned in tests/test_frontier_order.py)
-    n_robots_blocked = blocked.count()
-    n_scheduled = scheduled.count()
-    n_fetched_ok = results.where(F.col("status") == "ok").count()
-    n_failed = results.where(~F.col("status").isin("ok", "gated")).count()
+    # lineage (B13): per-(partition, host) rows from each stage's OWN
+    # aggregation. Collecting them is the pipeline's one action: it
+    # fills every persisted frame above, and the funnel row is their
+    # column sums (per-partition rows sum to the funnel totals — pinned
+    # in tests/test_frontier_order.py), so no stage is counted apart
+    counters = (
+        "n_candidates",
+        "n_bloom_new",
+        "n_deduped",
+        "n_robots_blocked",
+        "n_scheduled",
+        "n_fetched",
+        "n_failed",
+    )
 
-    _zeros = {
-        c: F.lit(0).cast("long").alias(c)
-        for c in (
-            "n_candidates",
-            "n_bloom_new",
-            "n_deduped",
-            "n_robots_blocked",
-            "n_scheduled",
-            "n_fetched",
-            "n_failed",
-        )
-    }
-
-    def _stage_rows(df: DataFrame, counters, host_col: bool = True) -> DataFrame:
+    def _stage_rows(df: DataFrame, aggs, host_col: bool = True) -> DataFrame:
         """Per-(partition, host) rows with the given counter columns
-        aggregated from `df` and the rest zero. `counters` maps
-        lineage column → aggregate expression."""
+        aggregated from `df` and the rest zero. `aggs` maps lineage
+        column → aggregate expression."""
         key = [F.spark_partition_id().alias("partition_id")] + (
             [F.col("host")] if host_col else [F.lit(None).cast("string").alias("host")]
         )
         agg = df.groupBy(*key).agg(
-            *[expr.cast("long").alias(name) for name, expr in counters.items()]
+            *[expr.cast("long").alias(name) for name, expr in aggs.items()]
         )
         cols = [F.lit(round_id).alias("round_id"), "partition_id", "host"] + [
-            F.col(c) if c in counters else _zeros[c] for c in _zeros
+            F.col(c) if c in aggs else F.lit(0).cast("long").alias(c) for c in counters
         ]
         return agg.select(*cols)
 
@@ -851,24 +873,13 @@ def run_round_pipeline(
             )
         )
     )
-    funnel = spark.createDataFrame(
-        [
-            (
-                round_id,
-                -1,
-                None,
-                n_candidates,
-                n_new,
-                n_deduped,
-                n_robots_blocked,
-                n_scheduled,
-                n_fetched_ok,
-                n_failed,
-            )
-        ],
-        schemas.LINEAGE,
+    part_rows = [tuple(r) for r in per_part.collect()]
+    funnel = [sum(r[3 + i] for r in part_rows) for i in range(len(counters))]
+    lineage = spark.createDataFrame(
+        part_rows + [(round_id, -1, None, *funnel)], schemas.LINEAGE
     )
-    lineage = per_part.unionByName(funnel)
+    (n_candidates, n_new, n_deduped, n_robots_blocked, n_scheduled, n_fetched_ok,
+     n_failed) = funnel
 
     return RoundResult(
         round_id=round_id,
@@ -879,7 +890,6 @@ def run_round_pipeline(
         n_scheduled=n_scheduled,
         n_fetched_ok=n_fetched_ok,
         n_failed=n_failed,
-        n_next_frontier=0,  # filled by commit
         scheduled_df=scheduled,
         results_df=results,
         new_seen_df=new_seen,
@@ -887,4 +897,5 @@ def run_round_pipeline(
         lineage_df=lineage,
         permanent_failures_df=permanent_failures,
         persisted=persisted,
+        broadcasts=broadcasts,
     )

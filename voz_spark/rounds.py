@@ -14,6 +14,19 @@ committed seen rows — a crash can therefore never produce a bloom
 that claims URLs the seen table lacks (no false "maybe seen" without
 an anti-join backstop, and false negatives are impossible because the
 blobs are rebuilt from the very hashes being committed).
+
+One bloom update path: every round rebuilds the touched shards with
+`updated_bloom_cogroup` (new hashes cogrouped with the stored blob
+rows per shard; untouched shards pass through). The broadcast of the
+stored blobs serves membership only, while the state fits
+cfg.bloom_broadcast_max_bytes.
+
+Where a round's counts come from: the funnel (n_candidates … n_failed)
+is the column sums of the lineage rows the pipeline collects once
+(frontier.run_round_pipeline); the checkpoint's n_frontier and the new
+seen rows are `Observation` counts on the frontier and seen commit
+writes, read after those writes return; the only standalone count is
+`seen.count()` of the committed seen table, for n_seen_total.
 """
 
 from __future__ import annotations
@@ -22,7 +35,7 @@ import datetime as _dt
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from voz_spark import bloom as B
@@ -67,7 +80,7 @@ def updated_bloom_cogroup(
     appear as blob-only groups and pass through unchanged, and
     brand-new shards appear as hash-only groups and build from empty.
     With an empty `bloom_df` this is the full build from `seen`.
-    Bit-equivalence with the broadcast path is pinned in
+    Bit-equivalence with blobs built directly in numpy is pinned in
     tests/test_bloom.py."""
     nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
 
@@ -249,58 +262,9 @@ class CrawlEngine:
         return updated_bloom_cogroup(seen.select("url_hash"), empty, self.cfg)
 
     def _bloom_blobs_from(self, bloom_df: DataFrame) -> dict[int, bytes]:
+        """The stored blobs by shard, for the broadcast membership probe."""
         rows = bloom_df.collect()
         return {int(r.shard_id): bytes(r.bits) for r in rows}
-
-    def _updated_bloom(self, new_seen: DataFrame, old_blobs: dict[int, bytes]) -> DataFrame:
-        """Distributed incremental shard rebuild: only shards receiving
-        new hashes are rewritten (applyInPandas per shard); untouched
-        shards keep their existing rows."""
-        cfg = self.cfg
-        nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
-        bc = self.spark.sparkContext.broadcast(old_blobs)
-
-        def update(pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(pdf["shard_id"].iloc[0])
-            old = bc.value.get(sid)
-            bits = (
-                np.frombuffer(old, dtype=np.uint8).copy()
-                if old is not None
-                else B.empty_shard(nbits)
-            )
-            B.add_hashes(bits, pdf["url_hash"].to_numpy().astype(np.uint64), nbits, k)
-            return pd.DataFrame(
-                [{"shard_id": sid, "nbits": nbits, "k": k, "bits": bits.tobytes()}]
-            )
-
-        touched = (
-            new_seen.select(
-                F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard_id"),
-                "url_hash",
-            )
-            .groupBy("shard_id")
-            .applyInPandas(update, schemas.SEEN_BLOOM)
-        )
-        # derive touched ids from the CHEAP hash projection, not from the
-        # applyInPandas plan — collecting `touched` here would run the
-        # whole shard-rebuild pass twice (once now, once at write time)
-        touched_ids = {
-            int(r.shard_id)
-            for r in new_seen.select(
-                F.pmod(F.col("url_hash"), F.lit(n_shards)).cast("int").alias("shard_id")
-            )
-            .distinct()
-            .collect()
-        }
-        old_rows = [
-            {"shard_id": sid, "nbits": nbits, "k": k, "bits": blob}
-            for sid, blob in old_blobs.items()
-            if sid not in touched_ids
-        ]
-        if old_rows:
-            keep = self.spark.createDataFrame(pd.DataFrame(old_rows), schemas.SEEN_BLOOM)
-            return touched.unionByName(keep)
-        return touched
 
     def _bloom_state_is_broadcastable(self) -> bool:
         """Static criterion (no collect needed): full-capacity state
@@ -318,16 +282,11 @@ class CrawlEngine:
         tables = self.cat.manifest()["tables"]
         has_bloom_state = bool(tables.get("seen_bloom")) or bool(tables.get("seen"))
         bloom_table = self._validated_bloom_table()
-        broadcastable = self._bloom_state_is_broadcastable()
         blobs = (
             self._bloom_blobs_from(bloom_table)
-            if (broadcastable and has_bloom_state)
+            if (has_bloom_state and self._bloom_state_is_broadcastable())
             else {}
         )
-        # empty state (round 1 of every crawl) takes the free
-        # lit(False) membership path — never a cogroup shuffle
-        # against an empty bloom table
-        bloom_table = bloom_table if has_bloom_state else None
         # the exact-anti-join side of seen: the bucketed index (no
         # seen-side exchange) when configured, else the catalog files
         seen_for_anti = self.seen_idx.sync(self.cat) if self.seen_idx else seen
@@ -342,51 +301,52 @@ class CrawlEngine:
             self.cfg,
             round_id,
             self.img_space,
-            bloom_df=bloom_table,
+            # empty state (round 1 of every crawl) takes the free
+            # lit(False) membership path — never a cogroup shuffle
+            # against an empty bloom table
+            bloom_df=bloom_table if has_bloom_state else None,
         )
-        next_bloom = (
-            self._updated_bloom(rr.new_seen_df, blobs)
-            if broadcastable
-            else updated_bloom_cogroup(
-                rr.new_seen_df,
-                bloom_table
-                if bloom_table is not None
-                else self._read("seen_bloom", schemas.SEEN_BLOOM),
-                self.cfg,
-            )
-        )
+        next_bloom = updated_bloom_cogroup(rr.new_seen_df, bloom_table, self.cfg)
+
+        # the two sizes the checkpoint needs are observed on the writes
+        # that already scan those rows; an Observation is filled when its
+        # write returns
+        n_rows = F.count(F.lit(1)).alias("n")
+        seen_obs, frontier_obs = Observation("new_seen"), Observation("next_frontier")
+        appends = {
+            "seen": self.cat.write_files(rr.new_seen_df.observe(seen_obs, n_rows), "seen"),
+            "results": self.cat.write_files(rr.results_df, "results"),
+            "lineage": self.cat.write_files(rr.lineage_df, "lineage"),
+        }
         # A12: permanent failures only — retried URLs went back into
         # rr.next_frontier_df with attempt+1 (the union-back lives in
         # run_round_pipeline so the simulator semantics stay in one place)
-        failures = rr.permanent_failures_df
-
-        n_next = rr.next_frontier_df.count()
-        n_seen_total = seen.count() + rr.new_seen_df.count()
+        fail_files = self.cat.write_files(rr.permanent_failures_df, "fetch_failures")
+        if fail_files:
+            appends["fetch_failures"] = fail_files
+        replaces = {
+            "frontier": self.cat.write_files(
+                rr.next_frontier_df.observe(frontier_obs, n_rows), "frontier"
+            ),
+            "seen_bloom": self.cat.write_files(next_bloom, "seen_bloom"),
+        }
+        if tables.get("seen_cuckoo"):
+            # state of the retired cuckoo filter: drop it from the
+            # manifest so snapshot expiry can reclaim its files
+            replaces["seen_cuckoo"] = []
+        n_next = frontier_obs.get["n"]
         checkpoint = self.spark.createDataFrame(
             [
                 (
                     round_id,
                     _dt.datetime.now(_dt.timezone.utc).isoformat(),
                     n_next,
-                    n_seen_total,
+                    seen.count() + seen_obs.get["n"],
                 )
             ],
             schemas.CHECKPOINTS,
         )
-
-        appends = {
-            "seen": self.cat.write_files(rr.new_seen_df, "seen"),
-            "results": self.cat.write_files(rr.results_df, "results"),
-            "lineage": self.cat.write_files(rr.lineage_df, "lineage"),
-            "checkpoints": self.cat.write_files(checkpoint, "checkpoints"),
-        }
-        fail_files = self.cat.write_files(failures, "fetch_failures")
-        if fail_files:
-            appends["fetch_failures"] = fail_files
-        replaces = {
-            "frontier": self.cat.write_files(rr.next_frontier_df, "frontier"),
-            "seen_bloom": self.cat.write_files(next_bloom, "seen_bloom"),
-        }
+        appends["checkpoints"] = self.cat.write_files(checkpoint, "checkpoints")
         self.cat.commit(
             appends=appends,
             replaces=replaces,
