@@ -6,11 +6,12 @@ the same jobs run on the same input at N and 4N local cores;
 efficiency = (throughput_4N / throughput_N) / 4.
 
 Measured jobs:
-- schedule : the frontier scheduling pipeline (canonicalize → dedup →
-  bloom → anti-join → robots → salted threshold top-k). This is the
-  BASELINE.json "URLs scheduled+deduped/s" metric.
-- round    : the full crawl-round job (scheduling + fetch + real
-  image decode/PSNR validation of every scheduled URL) — the
+- schedule : the engine's scheduling chain, frontier.schedule_stage
+  (canonicalize → dedup → bloom → anti-join → robots → salted
+  threshold top-k). This is the BASELINE.json "URLs
+  scheduled+deduped/s" metric.
+- round    : the full crawl-round job (scheduling + fetch + the
+  engine's image validation of every scheduled URL) — the
   north-rule job shape.
 
 Machine calibration: this sandbox is ONE shared VM. A pure-CPU
@@ -93,26 +94,36 @@ def wait_quiet(max_load: float = 3.5, timeout_s: int = 600) -> float:
     return l1
 
 
-def run_at(cpus: int, n_urls: int, job: str) -> dict:
+def run_child(code: str, env: dict[str, str], timeout: int = 2400) -> dict:
+    """The one child-JVM harness of bench/: wait for a quiet box, run
+    `code` (a str.format template; `{repo}` becomes the repo root) in
+    a fresh interpreter, hence a fresh JVM, with `env` added to this
+    process's environment, and return the JSON its `RESULT ` line
+    prints."""
     wait_quiet()
-    env = dict(os.environ)
-    env.update(
-        VOZ_BENCH_CPUS=str(cpus),
-        VOZ_BENCH_URLS=str(n_urls),
-        VOZ_BENCH_JOB=job,
-        SPARK_GRAFT_CPUS=str(cpus),
-    )
     out = subprocess.run(
-        [sys.executable, "-c", _CHILD.format(repo=REPO)],
+        [sys.executable, "-c", code.format(repo=REPO)],
         capture_output=True,
         text=True,
-        env=env,
-        timeout=2400,
+        env={**os.environ, **env},
+        timeout=timeout,
     )
     for line in out.stdout.splitlines():
         if line.startswith("RESULT "):
             return json.loads(line[len("RESULT ") :])
-    raise RuntimeError(f"child failed (cpus={cpus} job={job}):\n{out.stdout[-1500:]}\n{out.stderr[-1500:]}")
+    raise RuntimeError(f"child failed ({env}):\n{out.stdout[-1500:]}\n{out.stderr[-1500:]}")
+
+
+def run_at(cpus: int, n_urls: int, job: str) -> dict:
+    return run_child(
+        _CHILD,
+        dict(
+            VOZ_BENCH_CPUS=str(cpus),
+            VOZ_BENCH_URLS=str(n_urls),
+            VOZ_BENCH_JOB=job,
+            SPARK_GRAFT_CPUS=str(cpus),
+        ),
+    )
 
 
 def paired(job: str, n_urls: int, n_pairs: int, n_small: int, n_big: int) -> dict:
@@ -505,8 +516,9 @@ models, and the pairs below are measured with it.
 
 ## Job 2 — full crawl round (the north-rule job), local[{pn}] vs local[{p4n}]
 
-Job 1 + fetch + REAL per-image decode (PNG/VQZ codecs) + PSNR >= 40 dB
-validation of every scheduled URL ({r_n["n_fetched_validated"]:,} images/round).
+Job 1 + fetch + the engine's image validation (size gate, REAL
+PNG/VQZ decode, PSNR >= 40 dB / PNG-exact pixels, caption) of every
+scheduled URL ({r_n["n_fetched_validated"]:,} images/round).
 
 | parallelism | URLs/s | wall (s) |
 |---|---|---|

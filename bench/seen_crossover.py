@@ -20,11 +20,12 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench.scaling import run_child  # noqa: E402
 
 _CHILD = r"""
 import dataclasses, json, os, sys
@@ -52,25 +53,10 @@ print("RESULT " + json.dumps({{"best": best, "runs": runs}}))
 
 
 def run_store(store: str, cpus: int, n_urls: int) -> dict:
-    from bench.scaling import wait_quiet
-
-    wait_quiet()
-    env = dict(os.environ)
-    env.update(
-        VOZ_BENCH_CPUS=str(cpus), VOZ_BENCH_URLS=str(n_urls), VOZ_BENCH_STORE=store
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD.format(repo=REPO)],
-        capture_output=True,
-        text=True,
-        env=env,
+    return run_child(
+        _CHILD,
+        dict(VOZ_BENCH_CPUS=str(cpus), VOZ_BENCH_URLS=str(n_urls), VOZ_BENCH_STORE=store),
         timeout=3600,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT ") :])
-    raise RuntimeError(
-        f"child failed (store={store}):\n{out.stdout[-1500:]}\n{out.stderr[-1500:]}"
     )
 
 

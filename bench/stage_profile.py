@@ -15,7 +15,7 @@ broadcast collection, cache materialization barriers) show up as
 job-gap time.
 
 Usage: python bench/stage_profile.py [--urls 16000000] [--pairs 6 24]
-       [--no-persist-cand] [--no-persist-stage1] [--out PATH]
+       [--out PATH]
 
 The shuffle-bytes sidecar goes to --out (default
 BENCH/stage_profile_latest.json, not committed); pass
@@ -28,11 +28,12 @@ import argparse
 import glob
 import json
 import os
-import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from bench.scaling import run_child  # noqa: E402
 
 _CHILD = r"""
 import json, os, sys, shutil
@@ -51,43 +52,23 @@ spark = get_spark("voz_stage_profile", master="local[" + str(cpus) + "]",
                                "spark.eventLog.compress": "false",
                                "spark.eventLog.dir": evdir}})
 spark.range(1000).count()
-r = bench_frontier_schedule(
-    spark, n_urls=n, partitions=cpus * 2,
-    persist_cand=os.environ.get("VOZ_PERSIST_CAND", "1") == "1",
-    persist_stage1=os.environ.get("VOZ_PERSIST_STAGE1", "1") == "1",
-)
+r = bench_frontier_schedule(spark, n_urls=n, partitions=cpus * 2)
 spark.stop()
 print("RESULT " + json.dumps(r))
 """
 
 
-def run_level(cpus: int, n_urls: int, persist_cand: bool, persist_stage1: bool):
-    from bench.scaling import wait_quiet
-
-    wait_quiet()
+def run_level(cpus: int, n_urls: int):
     evdir = f"/tmp/voz-evlog-{cpus}"
-    env = dict(os.environ)
-    env.update(
-        VOZ_BENCH_CPUS=str(cpus),
-        VOZ_BENCH_URLS=str(n_urls),
-        VOZ_EVLOG_DIR=evdir,
-        VOZ_PERSIST_CAND="1" if persist_cand else "0",
-        VOZ_PERSIST_STAGE1="1" if persist_stage1 else "0",
-        SPARK_GRAFT_CPUS=str(cpus),
+    result = run_child(
+        _CHILD,
+        dict(
+            VOZ_BENCH_CPUS=str(cpus),
+            VOZ_BENCH_URLS=str(n_urls),
+            VOZ_EVLOG_DIR=evdir,
+            SPARK_GRAFT_CPUS=str(cpus),
+        ),
     )
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD.format(repo=REPO)],
-        capture_output=True,
-        text=True,
-        env=env,
-        timeout=2400,
-    )
-    result = None
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT "):
-            result = json.loads(line[len("RESULT ") :])
-    if result is None:
-        raise RuntimeError(out.stdout[-1500:] + out.stderr[-1500:])
     return result, parse_eventlog(evdir)
 
 
@@ -178,8 +159,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--urls", type=int, default=int(os.environ.get("VOZ_BENCH_URLS", "16000000")))
     ap.add_argument("--pairs", type=int, nargs=2, default=[6, 24])
-    ap.add_argument("--no-persist-cand", action="store_true")
-    ap.add_argument("--no-persist-stage1", action="store_true")
     ap.add_argument(
         "--out",
         default=os.path.join(REPO, "BENCH", "stage_profile_latest.json"),
@@ -188,17 +167,12 @@ def main() -> None:
     args = ap.parse_args()
     levels = []
     for cpus in args.pairs:
-        result, prof = run_level(
-            cpus, args.urls, not args.no_persist_cand, not args.no_persist_stage1
-        )
+        result, prof = run_level(cpus, args.urls)
         levels.append((cpus, result, prof))
     report(levels)
     n, f = levels[0][1], levels[-1][1]
     ratio = args.pairs[1] / args.pairs[0]
-    print(
-        f"\nefficiency = {f['urls_per_sec']/n['urls_per_sec']/ratio:.3f} "
-        f"(persist_cand={not args.no_persist_cand} persist_stage1={not args.no_persist_stage1})"
-    )
+    print(f"\nefficiency = {f['urls_per_sec']/n['urls_per_sec']/ratio:.3f}")
     # sidecar for BENCH/BASELINE.md's roofline section (scaling.py
     # _roofline_section): total shuffle WRITE bytes across the round's
     # stages, per input URL, at the small-N level (byte volume is

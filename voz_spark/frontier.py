@@ -602,29 +602,33 @@ def _validate_images(joined: DataFrame, cfg: CrawlConfig) -> DataFrame:
     return joined.mapInPandas(validate, _VALIDATE_SCHEMA)
 
 
-def run_round_pipeline(
+def schedule_stage(
     spark: SparkSession,
     frontier: DataFrame,
     seen: DataFrame,
     shard_blobs: dict[int, bytes],
-    images: DataFrame,
     robots_rules: list[dict],
     budgets: dict[str, int],
     cfg: CrawlConfig,
-    round_id: int,
-    img_space: int,
+    persisted: list[DataFrame],
+    broadcasts: list[Broadcast],
     bloom_df: DataFrame | None = None,
-) -> RoundResult:
-    """Execute one crawl round; returns the new state DataFrames
-    (nothing committed here — rounds.CrawlEngine.run_round commits
-    them atomically) and the funnel counts, from its one action, the
-    lineage collect (module docstring). Membership is the bloom prefilter
-    (`_bloom_split`: broadcast `shard_blobs`, or a shard-aligned
-    cogroup against `bloom_df`); its contract is no false negatives,
-    and maybe_seen rows pass the exact anti-join backstop."""
-    persisted: list[DataFrame] = []
-    broadcasts: list[Broadcast] = []
+) -> tuple[DataFrame, DataFrame]:
+    """The round's scheduling chain: canonicalize → in-batch dedup →
+    seen-filter membership → exact anti-join against `seen` → robots →
+    salted per-host schedule. The one composition of these stages: the
+    engine round and both bench jobs (bench_frontier) run it.
 
+    Returns `(new, sched_all)`: `new` holds the unseen candidates with
+    their `robots_blocked` flag (packed `_pri`, plus `host`/`path`);
+    `sched_all` holds the robots-allowed ones with the `scheduled`
+    flag. Membership is the bloom prefilter (`_bloom_split`: broadcast
+    `shard_blobs`, or a shard-aligned cogroup against `bloom_df`); its
+    contract is no false negatives, and maybe_seen rows pass the exact
+    anti-join backstop. Nothing runs here. The persisted frames (cand,
+    new, stage 1, sched_all) are appended to `persisted` and any
+    membership broadcast to `broadcasts`; the caller releases both
+    once its plan has run (RoundResult.unpersist)."""
     cand = _host_path(_dedup_in_batch(_canonicalize(frontier)))
     # persist before the membership fork: both the definitely-new branch
     # and the anti-join branch read this, and without a persist each
@@ -638,12 +642,10 @@ def run_round_pipeline(
     new = new.persist()
     persisted.append(new)
 
-    blocked = _unpack_pri(new.where(F.col("robots_blocked")))
     # `path` and the spent robots flag have no consumer past this
     # point — dropping them here keeps ~25% of the string bytes out of
     # the scheduling window exchange and the stage-1 cache
     allowed = new.where(~F.col("robots_blocked")).drop("robots_blocked", "path")
-
     sched_all = _schedule(
         allowed,
         budgets,
@@ -652,6 +654,35 @@ def run_round_pipeline(
         persisted,
     ).persist()
     persisted.append(sched_all)
+    return new, sched_all
+
+
+def run_round_pipeline(
+    spark: SparkSession,
+    frontier: DataFrame,
+    seen: DataFrame,
+    shard_blobs: dict[int, bytes],
+    images: DataFrame,
+    robots_rules: list[dict],
+    budgets: dict[str, int],
+    cfg: CrawlConfig,
+    round_id: int,
+    img_space: int,
+    bloom_df: DataFrame | None = None,
+) -> RoundResult:
+    """Execute one crawl round: `schedule_stage`, then fetch/validate
+    and lineage. Returns the new state DataFrames (nothing committed
+    here — rounds.CrawlEngine.run_round commits them atomically) and
+    the funnel counts, from its one action, the lineage collect
+    (module docstring)."""
+    persisted: list[DataFrame] = []
+    broadcasts: list[Broadcast] = []
+
+    new, sched_all = schedule_stage(
+        spark, frontier, seen, shard_blobs, robots_rules, budgets, cfg,
+        persisted, broadcasts, bloom_df=bloom_df,
+    )
+    blocked = _unpack_pri(new.where(F.col("robots_blocked")))
     scheduled = sched_all.where(F.col("scheduled"))
     pending = sched_all.where(~F.col("scheduled"))
 

@@ -70,8 +70,10 @@ def release_caches(spark: SparkSession) -> int:
     harness that keeps its own long-lived cache (e.g. a preloaded seen
     set or a shared fixture) must either re-persist after each call or
     scope release_caches around the query-only region (what
-    bench_frontier does: its seen set is built, used, and dropped
-    within one measured region, never held across a release).
+    bench_frontier does: each bench call builds its seen set, bloom
+    blobs and bucketed index, runs one timed round on them, and
+    releases them, the round's persists and its broadcasts before it
+    returns, so nothing of it is held across a release).
     """
     spark.catalog.clearCache()
     # py4j exposes the JavaSparkContext's Map<Integer, JavaRDD> as a

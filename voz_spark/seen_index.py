@@ -110,7 +110,8 @@ class BucketedSeenIndex:
             .saveAsTable(self.table)
         )
 
-    def _drop(self) -> None:
+    def drop(self) -> None:
+        """Drop the index: its metastore entry and its files."""
         self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
         shutil.rmtree(self.path, ignore_errors=True)
 
@@ -128,10 +129,10 @@ class BucketedSeenIndex:
             synced = None  # marker without data: treat as fresh
         if synced is not None and not set(synced) <= set(cur_files):
             # seen was replaced (reopen/expiry): derived state is stale
-            self._drop()
+            self.drop()
             synced = None
         if synced is None:
-            self._drop()
+            self.drop()
             delta = cur_files
         else:
             if not self._registered():
