@@ -109,14 +109,10 @@ def main() -> None:
 
     times = _bench(HEADLINE)
 
-    # headline frontier row: the engine's bloom seen filter. Best of 3:
-    # this box sees large co-tenant wall-clock swings
-    # (BENCH/BASELINE.md notes; one observed window halved a single
-    # run) — the later runs are also codegen-warm.
-    import dataclasses
-
-    from voz_spark.config import DEFAULT
-
+    # headline frontier row: the engine's bloom seen filter and bucketed
+    # seen store. Best of 3: this box sees large co-tenant wall-clock
+    # swings (BENCH/BASELINE.md notes; one observed window halved a
+    # single run) — the later runs are also codegen-warm.
     frontier = None
     for _ in range(3):
         r = bench_frontier_schedule(spark, n_urls=n_frontier)
@@ -124,16 +120,6 @@ def main() -> None:
             frontier = r
 
     extra = _bench(EXTRA)
-
-    # the bucketed seen-store variant — the 10^10 design point (seen
-    # side re-read with zero Exchange from the bucket-sorted index;
-    # VERDICT r3 item 7 asked for a published throughput row)
-    bkcfg = dataclasses.replace(DEFAULT, seen_store="bucketed")
-    frontier_bk = None
-    for _ in range(2):
-        r = bench_frontier_schedule(spark, n_urls=n_frontier, cfg=bkcfg)
-        if frontier_bk is None or r["urls_per_sec"] > frontier_bk["urls_per_sec"]:
-            frontier_bk = r
     spark.stop()
 
     total = round(sum(times.values()), 3)
@@ -147,7 +133,6 @@ def main() -> None:
                 "extra_queries": extra,
                 "sf": sf_dir,
                 "frontier": frontier,
-                "frontier_bucketed": frontier_bk,
                 "frontier_urls_per_sec": frontier["urls_per_sec"],
             }
         )

@@ -6,7 +6,6 @@ broadcast temp file behind."""
 
 from __future__ import annotations
 
-import dataclasses
 import os
 from collections import Counter
 from urllib.parse import urlsplit
@@ -14,7 +13,6 @@ from urllib.parse import urlsplit
 import pytest
 
 from voz_spark.bench_frontier import bench_frontier_schedule, bench_full_round
-from voz_spark.config import DEFAULT
 from voz_spark.frontier import RETRYABLE_STATUSES
 from voz_spark.synth import robots_rules
 
@@ -28,10 +26,8 @@ def runs(spark):
     """Each bench call's result and the files it left in the driver's
     temp dir (where a broadcast keeps its value until destroyed)."""
     tmp = spark.sparkContext._temp_dir
-    bucketed = dataclasses.replace(DEFAULT, seen_store="bucketed", seen_buckets=8)
     calls = {
-        "plain": lambda: bench_frontier_schedule(spark, n_urls=N_URLS),
-        "bucketed": lambda: bench_frontier_schedule(spark, n_urls=N_URLS, cfg=bucketed),
+        "schedule": lambda: bench_frontier_schedule(spark, n_urls=N_URLS),
         "round": lambda: bench_full_round(spark, n_urls=N_URLS, budget=ROUND_BUDGET),
     }
     out = {}
@@ -65,9 +61,9 @@ def unseen_allowed_per_host(spark):
 def test_schedule_bench_counts_match_independent_count(runs, unseen_allowed_per_host):
     budget = min(25_000, N_URLS)  # bench_frontier_schedule's per-host budget
     expected = sum(min(budget, n) for n in unseen_allowed_per_host.values())
-    plain, bucketed = runs["plain"][0], runs["bucketed"][0]
-    assert plain["n_scheduled"] == bucketed["n_scheduled"] == expected
-    assert plain["n_seen_preloaded"] == bucketed["n_seen_preloaded"] > 0
+    result = runs["schedule"][0]
+    assert result["n_scheduled"] == expected
+    assert result["n_seen_preloaded"] > 0
 
 
 def test_round_bench_validates_every_scheduled_url(runs, unseen_allowed_per_host):

@@ -44,6 +44,15 @@ def test_fetch_status_parity(crawl):
     assert got == exp
 
 
+def test_crawl_ran_on_seen_index(crawl):
+    """The three parity checks above hold on the engine's one seen
+    store: the rounds anti-joined against the bucketed seen index, whose
+    marker lists the committed seen files the last round started from."""
+    eng, _ = crawl
+    synced = eng.seen_idx._synced_files()
+    assert synced and set(synced) <= set(eng.cat.manifest()["tables"]["seen"])
+
+
 def test_image_validation_invariants(crawl):
     """input_hint: decoded-pixel allclose (PSNR=inf for png),
     PSNR ≥ 40 dB for lossy, exact caption equality on every ok row."""
@@ -249,28 +258,3 @@ def test_thread_limit_and_sticky_parity(spark):
     sim = simulate(n_seeds=40, n_images=200, thread_limit=6)
     assert eng.schedule_order() == sim.schedule
     assert {r.canon_url for r in eng.seen().collect()} == sim.seen
-
-
-def test_robots_table_join_matches_compiled_boolean(spark):
-    """The table-join robots path (millions-of-rules scale) must flag
-    exactly the same rows as the compiled Catalyst boolean."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from voz_spark import synth
-    from voz_spark.frontier import _robots_flag, _robots_flag_table
-
-    rules = synth.robots_rules()
-    rows = []
-    hosts = sorted({r["host"] for r in rules}) + ["unlisted.example"]
-    i = 0
-    for h in hosts:
-        for p in ["/", "/blocked", "/blocked/img/x.png", "/img/a.png", "/blocke", "/BLOCKED/x"]:
-            rows.append({"canon_url": f"https://{h}{p}", "host": h, "path": p, "i": i})
-            i += 1
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    compiled = {r["i"]: r["robots_blocked"] for r in _robots_flag(df, rules).collect()}
-    robots_df = spark.createDataFrame(pd.DataFrame(rules))
-    table = {r["i"]: r["robots_blocked"] for r in _robots_flag_table(df, robots_df).collect()}
-    assert compiled == table
-    assert any(compiled.values()) and not all(compiled.values())

@@ -11,10 +11,10 @@ dominant host (~70%) for skew realism. `bench_full_round` adds the
 engine's image validation (`frontier._validate_images`) of every
 scheduled URL.
 
-The seen-filter state is built before the timed window and dropped
-after it: the bloom blobs (the engine's distributed build,
-`rounds.updated_bloom_cogroup`) and, under cfg.seen_store="bucketed",
-the bucketed seen index (`seen_index.BucketedSeenIndex` synced from a
+The seen state is built before the timed window and dropped after it:
+the bloom blobs (the engine's distributed build,
+`rounds.updated_bloom_cogroup`) and the engine's seen store, the
+bucketed seen index (`seen_index.BucketedSeenIndex` synced from a
 temporary catalog). The metric is per-round membership + scheduling
 cost, not one-time state construction.
 
@@ -107,7 +107,7 @@ def _bench_round(spark: SparkSession, n_urls: int, parts: int, cfg: CrawlConfig)
     frontier, seen = bench_inputs(spark, n_urls, parts)
     seen = seen.persist()
     workdir = tempfile.mkdtemp(prefix="voz_bench_seen_")
-    idx = None
+    idx = BucketedSeenIndex(spark, workdir)
     persisted, broadcasts = [], []
     try:
         n_seen = seen.count()
@@ -116,13 +116,10 @@ def _bench_round(spark: SparkSession, n_urls: int, parts: int, cfg: CrawlConfig)
             int(r.shard_id): bytes(r.bits)
             for r in updated_bloom_cogroup(seen, empty, cfg).collect()
         }
-        seen_anti = seen
-        if cfg.seen_store == "bucketed":
-            cat = SnapshotCatalog(workdir)
-            rows = seen.withColumn("first_round", F.lit(0))
-            cat.commit(appends={"seen": cat.write_files(rows, "seen")})
-            idx = BucketedSeenIndex(spark, workdir, cfg.seen_buckets)
-            seen_anti = idx.sync(cat)
+        cat = SnapshotCatalog(workdir)
+        rows = seen.withColumn("first_round", F.lit(0))
+        cat.commit(appends={"seen": cat.write_files(rows, "seen")})
+        seen_anti = idx.sync(cat)
 
         def schedule(budgets: dict[str, int]):
             return schedule_stage(
@@ -137,8 +134,7 @@ def _bench_round(spark: SparkSession, n_urls: int, parts: int, cfg: CrawlConfig)
         for bc in broadcasts:
             bc.destroy()
         seen.unpersist()
-        if idx is not None:
-            idx.drop()
+        idx.drop()
         shutil.rmtree(workdir, ignore_errors=True)
 
 
@@ -165,7 +161,6 @@ def bench_frontier_schedule(
         "n_urls": n_urls,
         "n_seen_preloaded": n_seen,
         "n_scheduled": n_scheduled,
-        "seen_store": cfg.seen_store,
         "wall_sec": round(wall, 3),
         "urls_per_sec": round(n_urls / wall, 1),
         "parallelism": sc.defaultParallelism,

@@ -2,6 +2,10 @@
 
 Reference values cited per field; scale-dependent knobs are sized for
 the sandbox but parameterized for the 10^10-URL design point.
+
+The seen store of the exact anti-join is not a knob: the engine always
+reads seen through the bucketed index (voz_spark/seen_index.py, whose
+N_BUCKETS sizes the layout).
 """
 
 from __future__ import annotations
@@ -55,21 +59,6 @@ class CrawlConfig:
     # aligned via cogroup against the bloom table (no broadcast) — the
     # only viable strategy at the 10^10 design point's ~64 GiB state.
     bloom_broadcast_max_bytes: int = 64 << 20
-    # exact-anti-join seen storage. "plain": read the catalog's seen
-    # parquet files directly — the anti-join then shuffles BOTH sides
-    # on (url_hash, canon_url) every round, i.e. a full exchange of the
-    # 10^10-row seen table per round at the design point. "bucketed":
-    # maintain a hash-bucketed, bucket-sorted index of seen (CLUSTERED
-    # BY (url_hash, canon_url) SORTED BY the same) that the anti-join
-    # reads with NO seen-side exchange — only the tiny bloom-survivor
-    # candidate set shuffles into the bucket layout. At 10^10 rows the
-    # per-round saving is the entire seen shuffle (network + spill);
-    # the index is appended per round (bucket spec preserved), so each
-    # round pays only the new rows' write. seen_buckets sizes the
-    # layout: 32 for the sandbox; ~4096 at the design point (≈2.4M
-    # rows/bucket).
-    seen_store: str = "plain"
-    seen_buckets: int = 32
 
     def __post_init__(self) -> None:
         # frontier._dedup_in_batch packs attempt into the low

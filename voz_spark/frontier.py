@@ -330,11 +330,10 @@ def _dedup_against_seen(df: DataFrame, seen: DataFrame) -> DataFrame:
     sorts BOTH sides (maybe-rows and the seen slice) just to anti-join
     on an md5-uniform key — two full sorts the hash join skips
     (round-3 stage profile: the SMJ stage's task CPU inflated 2.4x at
-    4x cores, sorts being pure memory traffic). Per-task build memory
-    is seen/shuffle_partitions — bounded by sizing partitions to the
-    seen table (the 10^10 design point runs seen_store="bucketed"
-    anyway, where the seen side has NO exchange and this join reads
-    the bucket layout in place)."""
+    4x cores, sorts being pure memory traffic). The seen side is the
+    engine's bucketed seen index (voz_spark/seen_index.py): it has NO
+    exchange, this join reads the bucket layout in place, and per-task
+    build memory is one bucket, seen/N_BUCKETS."""
     maybe = df.where(F.col("maybe_seen"))
     fresh = df.where(~F.col("maybe_seen"))
     anti = maybe.join(
@@ -348,36 +347,16 @@ def _dedup_against_seen(df: DataFrame, seen: DataFrame) -> DataFrame:
 def _robots_flag(df: DataFrame, rules: list[dict]) -> DataFrame:
     """B9: robots compliance (new capability per north_rule). The rule
     set compiles to a pure Catalyst boolean (JVM-side, codegen'd — no
-    Python crossing) over the precomputed `path` column; with millions
-    of per-host rules this becomes a broadcast join on host + prefix
-    filter instead."""
+    Python crossing) over the precomputed `path` column. A rule set of
+    millions of per-host rows (one robots.txt per crawled host at
+    10^10) would need a join on host instead; the engine's rule set is
+    small, so only the compiled form exists."""
     disallowed = [(r["host"], r["path_prefix"]) for r in rules if not r["allowed"]]
     path = F.col("path")
     blocked = F.lit(False)
     for rh, prefix in disallowed:
         blocked = blocked | ((F.col("host") == rh) & path.startswith(prefix))
     return df.withColumn("robots_blocked", blocked)
-
-
-def _robots_flag_table(df: DataFrame, robots_df: DataFrame) -> DataFrame:
-    """B9 at scale: robots rules as a TABLE instead of a compiled
-    boolean — required when the rule set is millions of (host, prefix)
-    rows (one robots.txt per crawled host at 10^10). Disallow rules are
-    pre-aggregated to one array row per host, joined 1:1 on host (no
-    row multiplication; AQE picks broadcast vs shuffle join by size),
-    and the prefix test is a JVM-side `exists` over the array.
-    Equivalence with the compiled-boolean path is pinned in
-    tests/test_frontier_order.py."""
-    rules_by_host = (
-        robots_df.where(~F.col("allowed"))
-        .groupBy("host")
-        .agg(F.collect_list("path_prefix").alias("_prefixes"))
-    )
-    joined = df.join(rules_by_host, "host", "left")
-    blocked = F.when(
-        F.col("_prefixes").isNull(), F.lit(False)
-    ).otherwise(F.exists("_prefixes", lambda p: F.col("path").startswith(p)))
-    return joined.withColumn("robots_blocked", blocked).drop("_prefixes")
 
 
 def _unpack_pri(df: DataFrame) -> DataFrame:

@@ -131,13 +131,9 @@ class CrawlEngine:
         self.include_sticky = include_sticky
         self.cat = SnapshotCatalog(workdir)
         self.images_path = f"{workdir}/images_input"
-        # derived bucketed index of seen for a shuffle-free exact
-        # anti-join (cfg.seen_store; see voz_spark/seen_index.py)
-        self.seen_idx = (
-            BucketedSeenIndex(spark, workdir, cfg.seen_buckets)
-            if cfg.seen_store == "bucketed"
-            else None
-        )
+        # derived bucketed index of seen: the exact anti-join's seen
+        # side, read with no exchange (voz_spark/seen_index.py)
+        self.seen_idx = BucketedSeenIndex(spark, workdir)
         self.robots = synth.robots_rules()
         self.budgets = {
             r["host"]: r["max_fetches_per_round"]
@@ -287,13 +283,10 @@ class CrawlEngine:
             if (has_bloom_state and self._bloom_state_is_broadcastable())
             else {}
         )
-        # the exact-anti-join side of seen: the bucketed index (no
-        # seen-side exchange) when configured, else the catalog files
-        seen_for_anti = self.seen_idx.sync(self.cat) if self.seen_idx else seen
         rr = run_round_pipeline(
             self.spark,
             frontier,
-            seen_for_anti,
+            self.seen_idx.sync(self.cat),
             blobs,
             images,
             self.robots,

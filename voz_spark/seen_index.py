@@ -1,4 +1,5 @@
-"""Bucketed seen-index: a shuffle-free exact anti-join at 10^10 rows.
+"""Bucketed seen-index: the engine's seen store, a shuffle-free exact
+anti-join at 10^10 rows.
 
 The exact-dedup backstop (frontier._dedup_against_seen, SURVEY §2.B B3)
 left-anti joins bloom survivors against the FULL seen table on
@@ -15,16 +16,28 @@ exchange on the seen side (pinned by tests/test_seen_index.py); only
 the tiny bloom-survivor candidate set shuffles into the bucket layout.
 Each round appends only the new seen rows with the same bucket spec,
 so the steady-state per-round cost is O(new rows), not O(all rows).
+The engine reads seen for the anti-join only through this index
+(CrawlEngine.run_round): against a plain parquet read of seen it was
+within 2.5% at 16M and 32M frontier URLs and 25% faster at 64M
+(BENCH/frontier_bucketed_{32m,64m}.json), so no store selection exists.
+
+Bucket count: N_BUCKETS (32) sizes the sandbox; the 10^10 design point
+wants ~4096 (≈2.4M rows per bucket). The count is fixed per index: the
+marker records it, and an index written under another count is
+rebuilt rather than read with mismatched bucket DDL (candidates would
+hash to the wrong buckets and the anti-join could miss seen URLs).
 
 Consistency model (mirrors tables.SnapshotCatalog's crash rules):
 
 - The catalog's ``seen`` table remains the single source of truth; the
   index is DERIVED state, versioned by the exact file list it has
-  absorbed (``<workdir>/seen_bucketed.version``, atomic rename).
+  absorbed and the bucket count it was written with
+  (``<workdir>/seen_bucketed.version``, atomic rename).
 - ``sync`` appends precisely the data files the catalog added since
   the last marker; a wholesale seen replace (CrawlEngine.reopen) makes
   the marker's file list no longer a subset of the catalog's and
-  triggers a full index rebuild.
+  triggers a full index rebuild; so does a marker without a bucket
+  count or with a different one.
 - A crash between append and marker write can only re-append the same
   delta on the next sync: duplicated rows are semantically harmless to
   a left-anti membership probe (documented, not silent) and disappear
@@ -54,9 +67,11 @@ from voz_spark.tables import SnapshotCatalog
 
 _COLS = ["url_hash", "canon_url"]
 
+N_BUCKETS = 32
+
 
 class BucketedSeenIndex:
-    def __init__(self, spark: SparkSession, workdir: str, n_buckets: int):
+    def __init__(self, spark: SparkSession, workdir: str, n_buckets: int = N_BUCKETS):
         self.spark = spark
         self.n_buckets = n_buckets
         self.path = os.path.join(workdir, "seen_bucketed")
@@ -69,16 +84,21 @@ class BucketedSeenIndex:
     # -- marker ----------------------------------------------------------------
 
     def _synced_files(self) -> list[str] | None:
+        """The catalog seen files the index holds, or None when there is
+        no marker or it was written under another bucket count."""
         try:
             with open(self.version_path) as f:
-                return json.load(f)["files"]
+                marker = json.load(f)
         except FileNotFoundError:
             return None
+        if marker.get("n_buckets") != self.n_buckets:
+            return None
+        return marker["files"]
 
     def _write_marker(self, files: list[str]) -> None:
         fd, tmp = tempfile.mkstemp(dir=os.path.dirname(self.version_path))
         with os.fdopen(fd, "w") as f:
-            json.dump({"files": files}, f)
+            json.dump({"files": files, "n_buckets": self.n_buckets}, f)
         os.rename(tmp, self.version_path)
 
     # -- registration ----------------------------------------------------------
@@ -127,17 +147,16 @@ class BucketedSeenIndex:
         synced = self._synced_files()
         if synced is not None and not os.path.isdir(self.path):
             synced = None  # marker without data: treat as fresh
-        if synced is not None and not set(synced) <= set(cur_files):
-            # seen was replaced (reopen/expiry): derived state is stale
-            self.drop()
-            synced = None
-        if synced is None:
+        synced_set = set(synced or ())
+        if synced is None or not synced_set <= set(cur_files):
+            # no usable marker, or seen was replaced (reopen/expiry):
+            # derived state is stale
             self.drop()
             delta = cur_files
         else:
             if not self._registered():
                 self._register()
-            delta = [f for f in cur_files if f not in set(synced)]
+            delta = [f for f in cur_files if f not in synced_set]
         if delta:
             self._append(self.spark.read.schema(schemas.SEEN).parquet(*delta))
             self._write_marker(cur_files)
