@@ -25,6 +25,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from voz_spark.config import DEFAULT, CrawlConfig
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--workdir", required=True)
     ap.add_argument("--seeds", type=int, default=30)
@@ -33,6 +35,12 @@ def main() -> None:
     ap.add_argument("--thread-limit", type=int, default=None)
     ap.add_argument("--include-sticky", action="store_true")
     ap.add_argument("--master", default=None)
+    ap.add_argument(
+        "--bloom-broadcast-max-bytes",
+        type=int,
+        default=DEFAULT.bloom_broadcast_max_bytes,
+        help="also bounds the seen filter's delta: it folds above 1/8 of this",
+    )
     args = ap.parse_args()
 
     from voz_spark.rounds import CrawlEngine
@@ -46,6 +54,7 @@ def main() -> None:
         n_images=args.images,
         thread_limit=args.thread_limit,
         include_sticky=args.include_sticky,
+        cfg=CrawlConfig(bloom_broadcast_max_bytes=args.bloom_broadcast_max_bytes),
     )
     t0 = time.time()
     stats = eng.run(max_rounds=args.rounds, verbose=True)

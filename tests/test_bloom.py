@@ -316,3 +316,274 @@ def test_engine_reopen_recrawls_urls(spark):
         assert counts[u] == 2, (u, counts[u])
     untouched = [u for u in threads if u not in targets]
     assert all(counts[u] == 1 for u in untouched)
+
+
+# -- base + delta seen filter ---------------------------------------------------
+#
+# The engine's filter is a bloom base (the `seen_bloom` blobs, rewritten
+# only at a fold) OR an exact delta: the url_hash values of the committed
+# seen files the base does not cover (the manifest marker names them).
+
+# 8 shards x 1024 bits = 1 KiB of state, all of it broadcastable; the
+# delta folds once it exceeds 1024 // DELTA_SHARE bytes (16 rows)
+SMALL = dict(n_bloom_shards=8, bloom_bits_per_shard=1 << 10, bloom_broadcast_max_bytes=1 << 10)
+
+
+def _numpy_blobs(cfg, hashes):
+    hashes = np.asarray(hashes, dtype=np.int64)
+    out = {}
+    for sid in sorted({int(h % cfg.n_bloom_shards) for h in hashes}):
+        bits = B.empty_shard(cfg.bloom_bits_per_shard)
+        sel = hashes[(hashes % cfg.n_bloom_shards) == sid].astype(np.uint64)
+        B.add_hashes(bits, sel, cfg.bloom_bits_per_shard, cfg.bloom_k)
+        out[sid] = bits.tobytes()
+    return out
+
+
+def _bloom_versions(cat):
+    """Per committed version: (round_id, seen_bloom files, seen files)."""
+    return [
+        (m["meta"].get("round_id"), m["tables"].get("seen_bloom", []), m["tables"].get("seen", []))
+        for m in (cat.manifest(v) for v in range(1, cat.latest_version() + 1))
+    ]
+
+
+def _assert_matches_simulator(eng, n_seeds=5, n_images=150):
+    from voz_spark.oracle_sim import simulate
+
+    sim = simulate(n_seeds=n_seeds, n_images=n_images)
+    assert eng.schedule_order() == sim.schedule
+    assert {r.canon_url for r in eng.seen().collect()} == sim.seen
+
+
+def test_base_plus_delta_membership_matches_numpy(spark):
+    """Both membership strategies flag a candidate iff the numpy bloom
+    over the base hashes may contain it OR it is in the exact delta; no
+    base or delta hash is ever flagged unseen."""
+    import pandas as pd
+
+    from voz_spark import schemas
+    from voz_spark.config import CrawlConfig
+    from voz_spark.frontier import _bloom_split
+
+    cfg = CrawlConfig(n_bloom_shards=8, bloom_bits_per_shard=1 << 12, bloom_k=5)
+    rng = np.random.default_rng(3)
+    base_h = rng.integers(-(2**63), 2**63 - 1, 400, dtype=np.int64)
+    delta_h = rng.integers(-(2**63), 2**63 - 1, 150, dtype=np.int64)
+    fresh_h = rng.integers(-(2**63), 2**63 - 1, 600, dtype=np.int64)
+    blobs = _numpy_blobs(cfg, base_h)
+    bloom_df = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                {"shard_id": s, "nbits": cfg.bloom_bits_per_shard, "k": cfg.bloom_k, "bits": b}
+                for s, b in blobs.items()
+            ]
+        ),
+        schemas.SEEN_BLOOM,
+    )
+    delta = np.unique(delta_h.astype(np.uint64))
+    cand_h = np.concatenate([base_h, delta_h, fresh_h])
+    cand = spark.createDataFrame(
+        pd.DataFrame({"url_hash": cand_h, "canon_url": [f"u{i}" for i in range(len(cand_h))]})
+    )
+
+    u = cand_h.astype(np.uint64)
+    shards = B.shard_of(u, cfg.n_bloom_shards)
+    want = np.isin(u, delta)
+    for i, sid in enumerate(shards):
+        bits = np.frombuffer(blobs[int(sid)], dtype=np.uint8)
+        want[i] |= B.maybe_contains(bits, u[i : i + 1], cfg.bloom_bits_per_shard, cfg.bloom_k)[0]
+    want = {f"u{i}": bool(w) for i, w in enumerate(want)}
+
+    broadcasts = []
+    for got_df in (
+        _bloom_split(spark, cand, blobs, cfg, broadcasts=broadcasts, delta=delta),
+        _bloom_split(spark, cand, {}, cfg, bloom_df=bloom_df, broadcasts=broadcasts, delta=delta),
+    ):
+        got = {r["canon_url"]: r["maybe_seen"] for r in got_df.collect()}
+        assert got == want
+        assert all(got[f"u{i}"] for i in range(len(base_h) + len(delta_h)))
+    assert len(broadcasts) == 2  # the cogroup path broadcasts the delta alone
+    for bc in broadcasts:
+        bc.destroy()
+    # the delta is exact: a delta-only filter flags exactly the delta
+    only = _bloom_split(spark, cand, {}, cfg, broadcasts=broadcasts, delta=delta).collect()
+    assert {r["canon_url"] for r in only if r["maybe_seen"]} == {
+        f"u{i}" for i in range(len(base_h), len(base_h) + len(delta_h))
+    }
+    broadcasts[-1].destroy()
+
+
+def test_crawl_that_folds_often_matches_simulator(spark):
+    """A bloom sized so small that the delta folds into the base every
+    few rounds: the crawl matches the sequential simulator, some rounds
+    fold and some run on base + delta, and the committed base is
+    bit-identical to `updated_bloom_cogroup` over the hashes of exactly
+    the seen files its marker says it covers."""
+    import tempfile
+
+    import pandas as pd
+
+    from voz_spark.config import CrawlConfig
+    from voz_spark.rounds import CrawlEngine, updated_bloom_cogroup
+
+    cfg = CrawlConfig(**SMALL)
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomfold-"), n_seeds=5, n_images=150, cfg=cfg)
+    eng.run()
+    _assert_matches_simulator(eng)
+
+    versions = _bloom_versions(eng.cat)
+    folds = [cur[0] for prev, cur in zip(versions, versions[1:]) if cur[1] != prev[1]]
+    deltas = [cur[0] for prev, cur in zip(versions, versions[1:]) if cur[1] == prev[1] and prev[2]]
+    assert len(folds) >= 2 and deltas, (folds, deltas)
+
+    man = eng.cat.manifest()
+    covers = man["meta"]["bloom_base_covers"]
+    assert man["meta"]["bloom_base_last"] == man["tables"]["seen"][covers - 1]
+    covered = pd.concat(
+        [pd.read_parquet(f, columns=["url_hash"]) for f in man["tables"]["seen"][:covers]]
+    )
+    empty = spark.createDataFrame([], "shard_id int, nbits long, k int, bits binary")
+    want = {
+        r["shard_id"]: bytes(r["bits"])
+        for r in updated_bloom_cogroup(spark.createDataFrame(covered), empty, cfg).collect()
+    }
+    got = {r.shard_id: bytes(r.bits) for r in eng._validated_bloom_table().collect()}
+    assert got == want == _numpy_blobs(cfg, covered["url_hash"].to_numpy())
+
+
+def test_resume_after_delta_commit_and_across_a_fold(spark):
+    """Kill → resume twice in one crawl: once after a round that
+    committed new seen rows as the delta (the next round folds them),
+    and once inside that fold (its new base written, the commit never
+    made). Each resumed engine reads only the committed catalog, the
+    delta from its parquet files; the finished crawl matches the
+    simulator."""
+    import tempfile
+
+    import pytest
+
+    from voz_spark.config import CrawlConfig
+    from voz_spark.rounds import CrawlEngine
+
+    cfg = CrawlConfig(**SMALL)
+    wd = tempfile.mkdtemp(prefix="bloomkill-")
+
+    def engine():
+        return CrawlEngine(spark, wd, n_seeds=5, n_images=150, cfg=cfg)
+
+    engine().run(max_rounds=2)
+    man = engine().cat.manifest()
+    covers = man["meta"]["bloom_base_covers"]
+    assert man["tables"]["seen_bloom"] and len(man["tables"]["seen"]) > covers  # a delta
+
+    eng = engine()  # kill 1: between the delta commit and its fold
+    real_commit = eng.cat.commit
+
+    def commit_unless_fold(replaces=None, **kw):
+        if replaces and "seen_bloom" in replaces:
+            raise RuntimeError("killed inside a fold")
+        return real_commit(replaces=replaces, **kw)
+
+    eng.cat.commit = commit_unless_fold
+    with pytest.raises(RuntimeError, match="inside a fold"):
+        eng.run()
+    assert eng.last_round() == 2 and eng.cat.manifest() == man
+    orphaned = set(eng.cat.orphan_files(min_age_s=0))
+    assert any("/seen_bloom/" in f for f in orphaned)  # the fold's unpublished base
+
+    eng = engine()  # kill 2: across the fold
+    eng.run()
+    _assert_matches_simulator(eng)
+    assert not orphaned & eng.cat.referenced_files()
+
+
+def test_compact_seen_forces_bloom_rebuild(spark):
+    """`compact("seen")` replaces seen's files, so the marker's prefix is
+    gone: the next round rebuilds the base from all of seen (and its
+    marker covers every compacted file), and the crawl still matches."""
+    import tempfile
+
+    from voz_spark import schemas
+    from voz_spark.rounds import CrawlEngine
+
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomcompact-"), n_seeds=5, n_images=150)
+    eng.run(max_rounds=3)
+    man = eng.cat.manifest()
+    assert eng._base_covers(man) is not None
+    # a rewrite into as many files as before still breaks the marker
+    renamed = [f"{f}.rewritten" for f in man["tables"]["seen"]]
+    assert eng._base_covers({**man, "tables": {**man["tables"], "seen": renamed}}) is None
+    eng.cat.compact(spark, "seen", schemas.SEEN, target_files=2)
+    compacted = eng.cat.manifest()["tables"]["seen"]
+    assert eng._base_covers(eng.cat.manifest()) is None
+    v = eng.cat.latest_version()
+    eng.run()
+    _assert_matches_simulator(eng)
+    man = eng.cat.manifest(v + 1)
+    assert man["tables"]["seen_bloom"] != eng.cat.manifest(v)["tables"]["seen_bloom"]
+    assert man["meta"]["bloom_base_covers"] == len(compacted)
+    assert man["meta"]["bloom_base_last"] == compacted[-1]
+
+
+def test_outside_seen_append_is_caught_by_delta(spark):
+    """Rows appended to `seen` by another writer after the base exists
+    stay covered: the base marker is still valid, the appended file is
+    part of the delta, and none of its URLs is scheduled — though the
+    simulator, which never saw the append, schedules them that round."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from voz_spark.canon import url_key
+    from voz_spark.oracle_sim import simulate
+    from voz_spark.rounds import CrawlEngine
+
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomappend-"), n_seeds=5, n_images=150)
+    eng.run(max_rounds=2)
+    cat = eng.cat
+    assert cat.manifest()["tables"]["seen_bloom"]  # the base exists
+    nxt = eng.last_round() + 1
+    targets = [u for r, u in simulate(n_seeds=5, n_images=150).schedule if r == nxt][:5]
+    assert targets
+    rows = spark.createDataFrame([(u,) for u in targets], "canon_url string").select(
+        url_key(F.col("canon_url")).alias("url_hash"), "canon_url", F.lit(0).alias("first_round")
+    )
+    appended = cat.write_files(rows, "seen")
+    cat.commit(appends={"seen": appended}, meta=cat.manifest()["meta"])
+    man = cat.manifest()
+    covers = eng._base_covers(man)
+    assert covers is not None and set(appended) <= set(man["tables"]["seen"][covers:])
+
+    eng.run_round()
+    assert cat.manifest()["tables"]["seen_bloom"] == man["tables"]["seen_bloom"]  # no fold
+    fetched = {r.canon_url for r in eng.results().where(F.col("round_id") == nxt).collect()}
+    assert fetched and not fetched & set(targets)
+
+
+def test_non_fold_round_writes_no_bloom(spark):
+    """Once the base exists, a round whose delta stays small writes no
+    `seen_bloom` file and leaves the manifest's `seen_bloom` list as it
+    was; lineage and checkpoint rows are written from the driver."""
+    import tempfile
+
+    from voz_spark.rounds import CrawlEngine
+
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomnofold-"), n_seeds=5, n_images=150)
+    eng.run(max_rounds=2)
+    cat = eng.cat
+    bloom_before = cat.manifest()["tables"]["seen_bloom"]
+    assert bloom_before
+    calls = []
+    for name in ("write_files", "write_rows"):
+        real = getattr(cat, name)
+
+        def record(*args, _name=name, _real=real):
+            calls.append((_name, args[-1]))
+            return _real(*args)
+
+        setattr(cat, name, record)
+    eng.run_round()
+    assert not [c for c in calls if c[1] == "seen_bloom"], calls
+    assert ("write_rows", "lineage") in calls and ("write_rows", "checkpoints") in calls
+    assert cat.manifest()["tables"]["seen_bloom"] == bloom_before

@@ -14,6 +14,15 @@ own blob (``applyInPandas``), which on a cluster co-locates with a
 small enough that a broadcast map is used for the scalar-UDF fast
 path as well.
 
+The engine's seen filter is a bloom BASE of these blobs OR an exact
+DELTA: the sorted url_hash values (8 B/row) of the seen rows committed
+since the base was last written (``in_sorted``). The base is rewritten
+only when the delta is folded into it (rounds.CrawlEngine: when the
+delta outgrows its share of cfg.bloom_broadcast_max_bytes, or when a
+replaced seen table forces a rebuild), so a round's filter upkeep is
+O(new rows), not O(state) — the per-window segments merged in bulk of
+segmented sliding-window filters (PAPERS.md).
+
 This is the engine's only URL-seen filter. A cuckoo filter (deletable,
 lower FPR) tied it on membership probes but made crawl rounds ~33%
 slower in a same-box A/B, all in its per-round state update; the one
@@ -21,7 +30,8 @@ consumer of deletion, ``CrawlEngine.reopen``, rebuilds the affected
 bloom from ``seen`` instead.
 
 Correctness contract (SURVEY §5.2 item 4): NO false negatives ever —
-bloom "definitely unseen" rows skip the exact anti-join; "maybe seen"
+rows neither the base nor the delta may contain skip the exact
+anti-join; "maybe seen"
 rows always go through the exact anti-join on (url_hash, canon_url),
 so false positives cannot drop URLs.
 
@@ -74,6 +84,16 @@ def maybe_contains(bits: np.ndarray, hashes: np.ndarray, nbits: int, k: int) -> 
     byte_idx = (pos >> 3).astype(np.int64)
     masks = (1 << (pos & np.uint64(7))).astype(np.uint8)
     return ((bits[byte_idx] & masks) == masks).all(axis=1)
+
+
+def in_sorted(keys: np.ndarray, hashes: np.ndarray) -> np.ndarray:
+    """Boolean array: exact membership of each uint64 hash in the
+    sorted uint64 array `keys` (the delta of the seen filter)."""
+    if len(keys) == 0 or len(hashes) == 0:
+        return np.zeros(len(hashes), dtype=bool)
+    idx = np.searchsorted(keys, hashes)
+    np.minimum(idx, len(keys) - 1, out=idx)
+    return keys[idx] == hashes
 
 
 def shard_of(hashes: np.ndarray, n_shards: int) -> np.ndarray:

@@ -58,6 +58,10 @@ class CrawlConfig:
     # membership UDF (no shuffle); above it, membership runs shard-
     # aligned via cogroup against the bloom table (no broadcast) — the
     # only viable strategy at the 10^10 design point's ~64 GiB state.
+    # It also bounds the filter's exact delta (always broadcast, 8 B per
+    # seen row not yet in the bloom base): once the delta would exceed
+    # 1/rounds.DELTA_SHARE of this, a round folds it into the base. At 0
+    # every round folds (and membership always cogroups).
     bloom_broadcast_max_bytes: int = 64 << 20
 
     def __post_init__(self) -> None:

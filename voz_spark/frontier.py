@@ -27,7 +27,8 @@ Scale design (10^10 frontier, 1000 executors):
 Every plan runs once. The pipeline's single action collects the small
 per-(partition, host) lineage aggregate: it fills the persisted frames
 the commit writes read from, and the funnel counts are its column
-sums — no stage is counted by a standalone `count()`. The next
+sums — no stage is counted by a standalone `count()`. The collected
+rows are the lineage table's rows, written from the driver. The next
 frontier and new seen sizes are observed on their commit writes
 (rounds.CrawlEngine.run_round).
 """
@@ -53,7 +54,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from voz_spark import bloom as B
-from voz_spark import schemas, synth
+from voz_spark import synth
 from voz_spark.canon import canonicalize_one
 from voz_spark.codec import decode_image, psnr
 from voz_spark.config import ATTEMPT_BITS, CrawlConfig
@@ -71,9 +72,10 @@ RETRYABLE_STATUSES = ("fetch_error", "missing", "decode_error", "psnr_fail", "ca
 class RoundResult:
     """One round's uncommitted state. The counts are the round's
     lineage funnel row (sums of the collected per-partition rows);
-    `lineage_df` is built from those same collected rows, so writing
-    it re-runs no stage. The next frontier's size is not here: it is
-    observed on the frontier write at commit."""
+    `lineage_rows` are those same collected rows plus the funnel row,
+    rows of schemas.LINEAGE already on the driver, so writing them runs
+    no Spark job. The next frontier's size is not here: it is observed
+    on the frontier write at commit."""
 
     round_id: int
     n_candidates: int
@@ -87,7 +89,7 @@ class RoundResult:
     results_df: DataFrame | None = None
     new_seen_df: DataFrame | None = None
     next_frontier_df: DataFrame | None = None
-    lineage_df: DataFrame | None = None
+    lineage_rows: list[tuple] = field(default_factory=list)
     permanent_failures_df: DataFrame | None = None
     persisted: list[DataFrame] = field(default_factory=list)
     broadcasts: list[Broadcast] = field(default_factory=list)
@@ -237,6 +239,7 @@ def _bloom_split_cogroup(
     df: DataFrame,
     bloom_df: DataFrame,
     cfg: CrawlConfig,
+    delta: Broadcast | None = None,
 ) -> DataFrame:
     """B3a at the 10^10 design point: shard-ALIGNED membership with no
     broadcast of the bloom state. Candidates shuffle once on
@@ -244,7 +247,9 @@ def _bloom_split_cogroup(
     candidates plus that shard's blob row (config comment in
     config.py: 2^27 bits x 4096 shards ≈ 64 GiB total — far beyond any
     broadcast). Bit tests are the same numpy kernel as the broadcast
-    path; equivalence is pinned by tests/test_bloom.py."""
+    path; equivalence is pinned by tests/test_bloom.py. `delta`, a
+    broadcast of the sorted uint64 hashes the blobs do not cover, is
+    tested exactly on top (`_bloom_split`)."""
     n_shards = cfg.n_bloom_shards
     cand = df.withColumn("_shard", F.pmod("url_hash", F.lit(n_shards)).cast("int"))
     out_schema = StructType(
@@ -254,14 +259,14 @@ def _bloom_split_cogroup(
 
     def test_shard(cand_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
         out = cand_pdf[in_cols].copy()
-        if len(blob_pdf) == 0:
-            out["maybe_seen"] = False
-            return out
-        bits = np.frombuffer(blob_pdf["bits"].iloc[0], dtype=np.uint8)
         h = cand_pdf["url_hash"].to_numpy().astype(np.uint64)
-        out["maybe_seen"] = B.maybe_contains(
-            bits, h, int(blob_pdf["nbits"].iloc[0]), int(blob_pdf["k"].iloc[0])
-        )
+        maybe = B.in_sorted(delta.value, h) if delta is not None else np.zeros(len(h), bool)
+        if len(blob_pdf):
+            bits = np.frombuffer(blob_pdf["bits"].iloc[0], dtype=np.uint8)
+            maybe |= B.maybe_contains(
+                bits, h, int(blob_pdf["nbits"].iloc[0]), int(blob_pdf["k"].iloc[0])
+            )
+        out["maybe_seen"] = maybe
         return out
 
     return (
@@ -278,9 +283,13 @@ def _bloom_split(
     cfg: CrawlConfig,
     bloom_df: DataFrame | None = None,
     broadcasts: list[Broadcast] | None = None,
+    delta: np.ndarray | None = None,
 ) -> DataFrame:
     """B3a: add `maybe_seen`. False → definitely unseen (skips the
-    anti-join). Two physical strategies, same semantics:
+    anti-join). The seen filter is a bloom base (the blobs) OR an
+    exact `delta`: the sorted uint64 hashes of the seen rows the base
+    does not cover yet (rounds.CrawlEngine folds it in when it grows).
+    Two physical strategies for the base, same semantics:
 
     - small state (sandbox / early crawl): shard blobs broadcast once,
       membership tested in a scalar pandas UDF — no extra shuffle;
@@ -289,34 +298,44 @@ def _bloom_split(
       (`_bloom_split_cogroup`). Callers can also force it by passing
       `bloom_df` with shard_blobs=None.
 
-    A broadcast made here is appended to `broadcasts`, for the caller
-    to destroy once the plan has run.
+    The delta always travels as a broadcast. A broadcast made here is
+    appended to `broadcasts`, for the caller to destroy once the plan
+    has run.
     """
-    if bloom_df is not None and (
+    delta = np.empty(0, dtype=np.uint64) if delta is None else delta
+    cogroup = bloom_df is not None and (
         not shard_blobs
         or sum(len(b) for b in shard_blobs.values()) > cfg.bloom_broadcast_max_bytes
-    ):
-        return _bloom_split_cogroup(df, bloom_df, cfg)
-    if not shard_blobs:
+    )
+    if not cogroup and not shard_blobs and not len(delta):
         return df.withColumn("maybe_seen", F.lit(False))
-    bc = spark.sparkContext.broadcast(shard_blobs)
-    if broadcasts is not None:
-        broadcasts.append(bc)
+
+    def broadcast(value) -> Broadcast:
+        bc = spark.sparkContext.broadcast(value)
+        if broadcasts is not None:
+            broadcasts.append(bc)
+        return bc
+
+    if cogroup:
+        return _bloom_split_cogroup(
+            df, bloom_df, cfg, delta=broadcast(delta) if len(delta) else None
+        )
+    bc = broadcast((shard_blobs, delta))
     nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
 
     @pandas_udf("boolean")
     def bloom_udf(hashes: pd.Series) -> pd.Series:
         h = hashes.to_numpy().astype(np.uint64)
+        blobs, keys = bc.value
+        out = B.in_sorted(keys, h)
         shards = B.shard_of(h, n_shards)
-        out = np.zeros(len(h), dtype=bool)
-        blobs = bc.value
         for sid in np.unique(shards):
             blob = blobs.get(int(sid))
             if blob is None:
                 continue
             mask = shards == sid
             bits = np.frombuffer(blob, dtype=np.uint8)
-            out[mask] = B.maybe_contains(bits, h[mask], nbits, k)
+            out[mask] |= B.maybe_contains(bits, h[mask], nbits, k)
         return pd.Series(out)
 
     return df.withColumn("maybe_seen", bloom_udf("url_hash"))
@@ -592,6 +611,7 @@ def schedule_stage(
     persisted: list[DataFrame],
     broadcasts: list[Broadcast],
     bloom_df: DataFrame | None = None,
+    delta: np.ndarray | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The round's scheduling chain: canonicalize → in-batch dedup →
     seen-filter membership → exact anti-join against `seen` → robots →
@@ -602,8 +622,8 @@ def schedule_stage(
     their `robots_blocked` flag (packed `_pri`, plus `host`/`path`);
     `sched_all` holds the robots-allowed ones with the `scheduled`
     flag. Membership is the bloom prefilter (`_bloom_split`: broadcast
-    `shard_blobs`, or a shard-aligned cogroup against `bloom_df`); its
-    contract is no false negatives, and maybe_seen rows pass the exact
+    `shard_blobs`, or a shard-aligned cogroup against `bloom_df`, OR
+    the exact sorted `delta` hashes); its contract is no false negatives, and maybe_seen rows pass the exact
     anti-join backstop. Nothing runs here. The persisted frames (cand,
     new, stage 1, sched_all) are appended to `persisted` and any
     membership broadcast to `broadcasts`; the caller releases both
@@ -613,7 +633,8 @@ def schedule_stage(
     # and the anti-join branch read this, and without a persist each
     # branch would re-run the canonicalization + dedup + membership UDF
     cand = _bloom_split(
-        spark, cand, shard_blobs, cfg, bloom_df=bloom_df, broadcasts=broadcasts
+        spark, cand, shard_blobs, cfg, bloom_df=bloom_df, broadcasts=broadcasts,
+        delta=delta,
     ).persist()
     persisted.append(cand)
     new = _dedup_against_seen(cand, seen)
@@ -648,6 +669,7 @@ def run_round_pipeline(
     round_id: int,
     img_space: int,
     bloom_df: DataFrame | None = None,
+    delta: np.ndarray | None = None,
 ) -> RoundResult:
     """Execute one crawl round: `schedule_stage`, then fetch/validate
     and lineage. Returns the new state DataFrames (nothing committed
@@ -659,7 +681,7 @@ def run_round_pipeline(
 
     new, sched_all = schedule_stage(
         spark, frontier, seen, shard_blobs, robots_rules, budgets, cfg,
-        persisted, broadcasts, bloom_df=bloom_df,
+        persisted, broadcasts, bloom_df=bloom_df, delta=delta,
     )
     blocked = _unpack_pri(new.where(F.col("robots_blocked")))
     scheduled = sched_all.where(F.col("scheduled"))
@@ -885,9 +907,6 @@ def run_round_pipeline(
     )
     part_rows = [tuple(r) for r in per_part.collect()]
     funnel = [sum(r[3 + i] for r in part_rows) for i in range(len(counters))]
-    lineage = spark.createDataFrame(
-        part_rows + [(round_id, -1, None, *funnel)], schemas.LINEAGE
-    )
     (n_candidates, n_new, n_deduped, n_robots_blocked, n_scheduled, n_fetched_ok,
      n_failed) = funnel
 
@@ -904,7 +923,7 @@ def run_round_pipeline(
         results_df=results,
         new_seen_df=new_seen,
         next_frontier_df=next_frontier,
-        lineage_df=lineage,
+        lineage_rows=part_rows + [(round_id, -1, None, *funnel)],
         permanent_failures_df=permanent_failures,
         persisted=persisted,
         broadcasts=broadcasts,

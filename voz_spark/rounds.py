@@ -8,25 +8,39 @@ become visible in a single atomic catalog commit, so a kill at ANY
 point leaves the previous round's state intact and a restart resumes
 exactly (test: tests/test_resume.py).
 
-Commit ordering note (SURVEY §7.4 item 2): bloom shards are committed
-in the same manifest as `seen`, and the bloom is derived FROM the
-committed seen rows — a crash can therefore never produce a bloom
-that claims URLs the seen table lacks (no false "maybe seen" without
-an anti-join backstop, and false negatives are impossible because the
-blobs are rebuilt from the very hashes being committed).
+Commit ordering note (SURVEY §7.4 item 2): the seen filter is a bloom
+base (the `seen_bloom` blobs) OR an exact delta, and both are derived
+from COMMITTED seen files. The manifest meta marks the leading seen
+files the base covers (`bloom_base_covers`, `bloom_base_last`); the
+seen files after them are the delta, whose url_hash values the driver
+reads with pyarrow. A base is only ever published in the same commit
+as a marker naming files that commit already lists, so a crash can
+never produce a filter that claims URLs the seen table lacks, and no
+committed seen row can be missing from base ∪ delta (no false
+negatives). A marker that no longer names the head of `seen` (a
+`reopen` or `compact` replaced it, a catalog predating the marker, a
+changed bloom layout) rebuilds the base from all of `seen`.
 
-One bloom update path: every round rebuilds the touched shards with
-`updated_bloom_cogroup` (new hashes cogrouped with the stored blob
-rows per shard; untouched shards pass through). The broadcast of the
-stored blobs serves membership only, while the state fits
-cfg.bloom_broadcast_max_bytes.
+One bloom update path: a fold. `updated_bloom_cogroup` cogroups the
+delta's hashes with the stored blob rows per shard (untouched shards
+pass through) and the new base is written in that round's commit. A
+round folds before its membership probe, and only when the delta's
+8 B/row would exceed 1/DELTA_SHARE of cfg.bloom_broadcast_max_bytes
+(or the base must be rebuilt); every other round writes no bloom
+state. At bloom_broadcast_max_bytes=0 every round folds. The delta
+always travels as a sorted uint64 broadcast; the base is broadcast
+(read with pyarrow, cached by its file list) while the full state fits
+cfg.bloom_broadcast_max_bytes, and is cogrouped shard-aligned beyond.
 
 Where a round's counts come from: the funnel (n_candidates … n_failed)
 is the column sums of the lineage rows the pipeline collects once
 (frontier.run_round_pipeline); the checkpoint's n_frontier and the new
 seen rows are `Observation` counts on the frontier and seen commit
-writes, read after those writes return; the only standalone count is
-`seen.count()` of the committed seen table, for n_seen_total.
+writes, read after those writes return; n_seen_total adds the new
+seen rows to the parquet-footer row counts of the committed seen files
+(cached per path on the driver). No standalone count runs, and the
+lineage and checkpoint rows, already on the driver, are written with
+pyarrow (`SnapshotCatalog.write_rows`), not by a Spark job.
 """
 
 from __future__ import annotations
@@ -35,6 +49,7 @@ import datetime as _dt
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,6 +59,11 @@ from voz_spark.config import DEFAULT, CrawlConfig
 from voz_spark.frontier import run_round_pipeline
 from voz_spark.seen_index import BucketedSeenIndex
 from voz_spark.tables import SnapshotCatalog
+
+# The seen filter's delta (8 B/row, always broadcast) is folded into the
+# bloom base once it would exceed this share of
+# cfg.bloom_broadcast_max_bytes: 1/8, 8 MiB (1M rows) at the default.
+DELTA_SHARE = 8
 
 
 def img_space_for(n_images: int) -> int:
@@ -79,9 +99,10 @@ def updated_bloom_cogroup(
     has full-outer semantics, so shards that received no new hashes
     appear as blob-only groups and pass through unchanged, and
     brand-new shards appear as hash-only groups and build from empty.
-    With an empty `bloom_df` this is the full build from `seen`.
-    Bit-equivalence with blobs built directly in numpy is pinned in
-    tests/test_bloom.py."""
+    With an empty `bloom_df` this is the full build from `seen`. The
+    engine calls it only to fold the seen filter's delta into the base
+    (CrawlEngine._seen_filter) and to rebuild. Bit-equivalence with
+    blobs built directly in numpy is pinned in tests/test_bloom.py."""
     nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
 
     def update(hashes_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -134,6 +155,12 @@ class CrawlEngine:
         # derived bucketed index of seen: the exact anti-join's seen
         # side, read with no exchange (voz_spark/seen_index.py)
         self.seen_idx = BucketedSeenIndex(spark, workdir)
+        # driver-side caches of immutable committed files (no Spark job
+        # reads them): footer row counts of `seen`, the delta's hashes,
+        # and the bloom base's blobs keyed by its file list
+        self._rows: dict[str, int] = {}
+        self._hashes: dict[str, np.ndarray] = {}
+        self._blobs: tuple[list[str] | None, dict[int, bytes]] = (None, {})
         self.robots = synth.robots_rules()
         self.budgets = {
             r["host"]: r["max_fetches_per_round"]
@@ -206,48 +233,61 @@ class CrawlEngine:
             F.lit(0).alias("attempt"),
         )
         files = {"frontier": self.cat.write_files(frontier, "frontier")}
-        self.cat.commit(replaces=files, meta={"round_id": 0, **self._bloom_params_meta()})
+        self.cat.commit(replaces=files, meta={"round_id": 0, **self._bloom_meta([], 0)})
 
     # -- bloom state ---------------------------------------------------------------
 
-    def _bloom_params_meta(self) -> dict:
-        """Bloom layout parameters persisted with every commit — stored
-        blobs are only meaningful under the (n_shards, nbits, k) they
-        were built with; resuming under different cfg values would
-        route pmod(hash, n_shards) against blobs built with another
-        shard count and silently re-crawl seen URLs."""
+    def _bloom_meta(self, seen_files: list[str], covers: int) -> dict:
+        """Seen-filter state persisted with every commit.
+
+        Layout parameters: stored blobs are only meaningful under the
+        (n_shards, nbits, k) they were built with; resuming under
+        different cfg values would route pmod(hash, n_shards) against
+        blobs built with another shard count and silently re-crawl
+        seen URLs.
+
+        Base marker: the bloom base covers the first `covers` committed
+        `seen` files, the last of them `bloom_base_last`. The seen files
+        after them are the exact delta."""
         cfg = self.cfg
         return {
             "bloom_n_shards": cfg.n_bloom_shards,
             "bloom_bits_per_shard": cfg.bloom_bits_per_shard,
             "bloom_k": cfg.bloom_k,
+            "bloom_base_covers": covers,
+            "bloom_base_last": seen_files[covers - 1] if covers else None,
         }
 
-    def _validated_bloom_table(self) -> DataFrame:
-        """The committed bloom state, REBUILT from `seen` if the stored
-        layout parameters disagree with (or predate) the current
-        config. The rebuild is the distributed cogroup path over the
-        authoritative seen table — never an interpretation of stored
-        blobs under mismatched shard routing."""
-        man = self.cat.manifest()
-        bloom_table = self._read("seen_bloom", schemas.SEEN_BLOOM)
-        if not man["tables"].get("seen_bloom"):
-            if man["tables"].get("seen"):
-                # seen exists but no bloom state (e.g. a catalog last
-                # committed by an engine that kept a cuckoo filter
-                # instead): rebuild, or the lit(False) fast path would
-                # skip the anti-join backstop
-                return self._rebuilt_bloom()
-            return bloom_table  # empty state: nothing to validate
-        meta = man["meta"]
+    def _base_covers(self, man: dict) -> int | None:
+        """How many leading committed `seen` files the committed bloom
+        base covers, or None when the base cannot be trusted: the layout
+        parameters differ from the config, the marker is missing, or its
+        prefix is no longer the head of `seen` (a `reopen` or `compact`
+        replaced the files, or a catalog had `seen` but no base)."""
+        meta, tables = man["meta"], man["tables"]
+        seen = tables.get("seen", [])
+        cfg = self.cfg
         stored = (
             meta.get("bloom_n_shards"),
             meta.get("bloom_bits_per_shard"),
             meta.get("bloom_k"),
         )
-        cfg = self.cfg
-        if stored == (cfg.n_bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_k):
-            return bloom_table
+        if stored != (cfg.n_bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_k):
+            return None
+        if not seen:
+            return 0
+        n = meta.get("bloom_base_covers")
+        if not tables.get("seen_bloom") or not isinstance(n, int) or not 1 <= n <= len(seen):
+            return None
+        return n if seen[n - 1] == meta.get("bloom_base_last") else None
+
+    def _validated_bloom_table(self) -> DataFrame:
+        """The committed bloom base if `_base_covers` vouches for it,
+        else the base REBUILT from all of `seen`: the distributed cogroup
+        path over the authoritative seen table — never an interpretation
+        of stored blobs under mismatched shard routing."""
+        if self._base_covers(self.cat.manifest()) is not None:
+            return self._read("seen_bloom", schemas.SEEN_BLOOM)
         return self._rebuilt_bloom()
 
     def _rebuilt_bloom(self, seen: DataFrame | None = None) -> DataFrame:
@@ -257,10 +297,38 @@ class CrawlEngine:
         empty = self.spark.createDataFrame([], schemas.SEEN_BLOOM)
         return updated_bloom_cogroup(seen.select("url_hash"), empty, self.cfg)
 
-    def _bloom_blobs_from(self, bloom_df: DataFrame) -> dict[int, bytes]:
-        """The stored blobs by shard, for the broadcast membership probe."""
-        rows = bloom_df.collect()
-        return {int(r.shard_id): bytes(r.bits) for r in rows}
+    def _file_rows(self, files: list[str]) -> int:
+        """Rows in committed parquet files, from their footers (cached
+        per path: data files are immutable). No Spark job."""
+        for f in files:
+            if f not in self._rows:
+                self._rows[f] = pq.read_metadata(f).num_rows
+        return sum(self._rows[f] for f in files)
+
+    def _delta_hashes(self, files: list[str]) -> np.ndarray:
+        """The sorted distinct url_hash values of `files` as uint64, read
+        with pyarrow (cached per path; files that left the delta are
+        dropped from the cache)."""
+        for f in files:
+            if f not in self._hashes:
+                col = pq.read_table(f, columns=["url_hash"]).column(0)
+                self._hashes[f] = col.to_numpy().astype(np.uint64)
+        self._hashes = {f: self._hashes[f] for f in files}
+        if not files:
+            return np.empty(0, dtype=np.uint64)
+        return np.unique(np.concatenate([self._hashes[f] for f in files]))
+
+    def _base_blobs(self, files: list[str]) -> dict[int, bytes]:
+        """The base's blobs by shard, for the broadcast membership probe,
+        read with pyarrow and cached by the `seen_bloom` file list: the
+        base changes only at a fold."""
+        if self._blobs[0] != files:
+            blobs = {}
+            for f in files:
+                t = pq.read_table(f, columns=["shard_id", "bits"]).to_pydict()
+                blobs.update(zip(t["shard_id"], t["bits"]))
+            self._blobs = (list(files), blobs)
+        return self._blobs[1]
 
     def _bloom_state_is_broadcastable(self) -> bool:
         """Static criterion (no collect needed): full-capacity state
@@ -268,21 +336,52 @@ class CrawlEngine:
         cfg = self.cfg
         return cfg.n_bloom_shards * cfg.bloom_bits_per_shard // 8 <= cfg.bloom_broadcast_max_bytes
 
+    def _seen_filter(self, man: dict) -> tuple[list[str], int]:
+        """The round's bloom base files and how many leading `seen`
+        files they cover. Folds first — writes a new base with
+        `updated_bloom_cogroup`, uncommitted until the round's commit —
+        when the committed base cannot be trusted (a rebuild: a fold of
+        all of `seen` into an empty base) or when the delta's 8 B/row
+        would exceed 1/DELTA_SHARE of cfg.bloom_broadcast_max_bytes."""
+        tables = man["tables"]
+        seen_files = tables.get("seen", [])
+        covers = self._base_covers(man)
+        if covers is None:
+            if not seen_files:
+                return [], 0
+            base = self._rebuilt_bloom()
+        elif self._file_rows(seen_files[covers:]) * 8 > (
+            self.cfg.bloom_broadcast_max_bytes // DELTA_SHARE
+        ):
+            delta = self.spark.read.schema(schemas.SEEN).parquet(*seen_files[covers:])
+            base = updated_bloom_cogroup(
+                delta.select("url_hash"), self._read("seen_bloom", schemas.SEEN_BLOOM), self.cfg
+            )
+        else:
+            return tables.get("seen_bloom", []), covers
+        return self.cat.write_files(base, "seen_bloom"), len(seen_files)
+
     # -- the round -------------------------------------------------------------------
 
     def run_round(self) -> dict:
         round_id = self.last_round() + 1
         frontier = self.frontier()
-        seen = self.seen()
         images = self.spark.read.schema(schemas.IMAGES).parquet(self.images_path)
-        tables = self.cat.manifest()["tables"]
-        has_bloom_state = bool(tables.get("seen_bloom")) or bool(tables.get("seen"))
-        bloom_table = self._validated_bloom_table()
-        blobs = (
-            self._bloom_blobs_from(bloom_table)
-            if (has_bloom_state and self._bloom_state_is_broadcastable())
-            else {}
-        )
+        man = self.cat.manifest()
+        tables = man["tables"]
+        seen_files = tables.get("seen", [])
+        bloom_files, covers = self._seen_filter(man)
+        delta = self._delta_hashes(seen_files[covers:])
+        if self._bloom_state_is_broadcastable():
+            blobs = self._base_blobs(bloom_files) if bloom_files else {}
+            bloom_df = None
+        else:
+            blobs = {}
+            bloom_df = (
+                self.spark.read.schema(schemas.SEEN_BLOOM).parquet(*bloom_files)
+                if bloom_files
+                else None
+            )
         rr = run_round_pipeline(
             self.spark,
             frontier,
@@ -294,12 +393,11 @@ class CrawlEngine:
             self.cfg,
             round_id,
             self.img_space,
-            # empty state (round 1 of every crawl) takes the free
-            # lit(False) membership path — never a cogroup shuffle
-            # against an empty bloom table
-            bloom_df=bloom_table if has_bloom_state else None,
+            # no base and no delta (round 1 of every crawl) takes the
+            # free lit(False) membership path
+            bloom_df=bloom_df,
+            delta=delta,
         )
-        next_bloom = updated_bloom_cogroup(rr.new_seen_df, bloom_table, self.cfg)
 
         # the two sizes the checkpoint needs are observed on the writes
         # that already scan those rows; an Observation is filled when its
@@ -309,7 +407,7 @@ class CrawlEngine:
         appends = {
             "seen": self.cat.write_files(rr.new_seen_df.observe(seen_obs, n_rows), "seen"),
             "results": self.cat.write_files(rr.results_df, "results"),
-            "lineage": self.cat.write_files(rr.lineage_df, "lineage"),
+            "lineage": self.cat.write_rows(rr.lineage_rows, schemas.LINEAGE, "lineage"),
         }
         # A12: permanent failures only — retried URLs went back into
         # rr.next_frontier_df with attempt+1 (the union-back lives in
@@ -321,29 +419,28 @@ class CrawlEngine:
             "frontier": self.cat.write_files(
                 rr.next_frontier_df.observe(frontier_obs, n_rows), "frontier"
             ),
-            "seen_bloom": self.cat.write_files(next_bloom, "seen_bloom"),
         }
+        if bloom_files != tables.get("seen_bloom", []):
+            replaces["seen_bloom"] = bloom_files  # this round folded
         if tables.get("seen_cuckoo"):
             # state of the retired cuckoo filter: drop it from the
             # manifest so snapshot expiry can reclaim its files
             replaces["seen_cuckoo"] = []
         n_next = frontier_obs.get["n"]
-        checkpoint = self.spark.createDataFrame(
-            [
-                (
-                    round_id,
-                    _dt.datetime.now(_dt.timezone.utc).isoformat(),
-                    n_next,
-                    seen.count() + seen_obs.get["n"],
-                )
-            ],
-            schemas.CHECKPOINTS,
+        checkpoint = (
+            round_id,
+            _dt.datetime.now(_dt.timezone.utc).isoformat(),
+            n_next,
+            self._file_rows(seen_files) + seen_obs.get["n"],
         )
-        appends["checkpoints"] = self.cat.write_files(checkpoint, "checkpoints")
+        self._rows = {f: self._rows[f] for f in seen_files}  # drop replaced files
+        appends["checkpoints"] = self.cat.write_rows(
+            [checkpoint], schemas.CHECKPOINTS, "checkpoints"
+        )
         self.cat.commit(
             appends=appends,
             replaces=replaces,
-            meta={"round_id": round_id, **self._bloom_params_meta()},
+            meta={"round_id": round_id, **self._bloom_meta(seen_files, covers)},
         )
         rr.unpersist()
         return {
@@ -402,30 +499,39 @@ class CrawlEngine:
             )
         )
         next_frontier = self.frontier().unionByName(refetch)
+        seen_files = self.cat.write_files(remaining, "seen")
         self.cat.commit(
             replaces={
-                "seen": self.cat.write_files(remaining, "seen"),
+                "seen": seen_files,
                 "frontier": self.cat.write_files(next_frontier, "frontier"),
                 "seen_bloom": self.cat.write_files(
                     self._rebuilt_bloom(remaining), "seen_bloom"
                 ),
             },
-            meta={"round_id": self.last_round(), **self._bloom_params_meta()},
+            # the rebuilt base covers every remaining seen file
+            meta={
+                "round_id": self.last_round(),
+                **self._bloom_meta(seen_files, len(seen_files)),
+            },
         )
         urls.unpersist()
         removed.unpersist()
         return {"n_reopened": n_removed}
 
     def run(self, max_rounds: int | None = None, verbose: bool = False) -> list[dict]:
+        """Run rounds until the frontier drains (or `max_rounds`). The
+        committed frontier is counted once, before the first round (a
+        resume may start on a drained one); after that each round's
+        observed next-frontier size decides."""
         self.bootstrap()
-        stats = []
-        r = 0
-        while max_rounds is None or r < max_rounds:
-            if self.frontier().limit(1).count() == 0:
-                break
+        stats: list[dict] = []
+        if self.frontier().limit(1).count() == 0:
+            return stats
+        while max_rounds is None or len(stats) < max_rounds:
             st = self.run_round()
             stats.append(st)
             if verbose:
                 print(st)
-            r += 1
+            if st["n_next_frontier"] == 0:
+                break
         return stats

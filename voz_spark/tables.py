@@ -73,6 +73,27 @@ class SnapshotCatalog:
         shutil.rmtree(tmp, ignore_errors=True)
         return out
 
+    def write_rows(self, rows: list[tuple], schema: StructType, table: str) -> list[str]:
+        """Write rows already on the driver (tuples in `schema`'s field
+        order) as one parquet data file owned by `table`, with pyarrow:
+        no Spark job. Same visibility rule as write_files: NOT visible
+        to readers until commit()."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        if not rows:
+            return []
+        arrow_schema = to_arrow_schema(schema)
+        tbl = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema=arrow_schema
+        )
+        dest_dir = os.path.join(self.root, "data", table)
+        os.makedirs(dest_dir, exist_ok=True)
+        dest = os.path.join(dest_dir, f"{uuid.uuid4().hex}.parquet")
+        pq.write_table(tbl, dest)
+        return [dest]
+
     # -- commit ----------------------------------------------------------------
 
     def commit(
