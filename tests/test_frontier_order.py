@@ -235,6 +235,45 @@ def test_round_counts_match_committed_state(spark):
         assert f.n_deduped == f.n_bloom_new
 
 
+# Spark jobs of one steady-state round of the 5-seed crawl below
+# (round 3: no fold, no bloom base build): the lineage collect (one job
+# per AQE query stage) plus one job per commit write
+ROUND_JOB_CAP = 33
+
+
+def test_round_spark_jobs_are_capped(spark):
+    """Plan shape of a whole round, counted through a status-tracker
+    job group: at most ROUND_JOB_CAP jobs, and the seen write is a
+    single job (a union of cached frames, no join to plan at runtime)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="crawl-jobs-"), n_seeds=5, n_images=150)
+    eng.run(max_rounds=2)
+    write_files = eng.cat.write_files
+
+    def grouped_write(df, table):
+        sc.setJobGroup(f"jobcap-write-{table}", table)
+        try:
+            return write_files(df, table)
+        finally:
+            sc.setJobGroup("jobcap-round", "round")
+
+    eng.cat.write_files = grouped_write
+    sc.setJobGroup("jobcap-round", "round")
+    try:
+        eng.run_round()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    writes = {
+        t: len(tracker.getJobIdsForGroup(f"jobcap-write-{t}"))
+        for t in ("seen", "results", "frontier", "fetch_failures")
+    }
+    total = len(tracker.getJobIdsForGroup("jobcap-round")) + sum(writes.values())
+    assert writes["seen"] == 1, writes
+    assert total <= ROUND_JOB_CAP, (total, writes)
+
+
 def test_round_leaves_no_broadcast_temp_file(spark):
     """A driver broadcast stays in a temp file until destroyed: a
     round with bloom state (broadcast membership) must destroy its

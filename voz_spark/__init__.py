@@ -16,6 +16,14 @@ DataFrame jobs designed for 1000-executor / 100 TB scale:
 - ``dataprep``   large-scale training-data operators (dedup families,
   ANN similarity, text quality, multimodal plumbing) that the 100 TB
   design point needs beyond the reference.
+- ``pyworker``   keeps a reused Python worker's per-task start-up short.
 """
 
+from voz_spark import pyworker
+
 __version__ = "0.1.0"
+
+# every engine UDF imports this package when a Python worker
+# deserializes it: from then on that reused worker's tasks skip the
+# per-task re-read of unchanged zip archives (pyworker docstring)
+pyworker.install()

@@ -786,9 +786,10 @@ def run_round_pipeline(
     # loop at src/image_processor.py:56,138-142). Only when attempt+1
     # reaches cfg.max_retries does the URL become a permanent failure
     # (fetch_failures sink) and enter the seen set.
-    failed = image_eval.where(F.col("status").isin(list(RETRYABLE_STATUSES)))
-    will_retry = failed.where(F.col("attempt") + 1 < cfg.max_retries)
-    permanent = failed.where(F.col("attempt") + 1 >= cfg.max_retries)
+    retryable = F.col("status").isin(list(RETRYABLE_STATUSES))
+    retry = retryable & (F.col("attempt") + 1 < cfg.max_retries)
+    will_retry = image_eval.where(retry)
+    permanent = image_eval.where(retryable & (F.col("attempt") + 1 >= cfg.max_retries))
     retry_frontier = will_retry.select(
         F.col("canon_url").alias("url"),
         F.lit(None).cast("string").alias("base_url"),
@@ -826,19 +827,16 @@ def run_round_pipeline(
     # cache — reference caches errors too, src/image_processor.py:127-136)
     # EXCEPT URLs that will be retried: those must pass the next
     # round's bloom + anti-join, so they only enter seen on success or
-    # permanent failure.
+    # permanent failure. image_eval holds exactly one row per scheduled
+    # image (images are unique by image_id), so "scheduled minus
+    # will_retry" is pages plus the image rows that will not retry: a
+    # union of cached frames, with no join. Only the seen write reads it.
     new_seen = (
-        scheduled.select("url_hash", "canon_url")
-        .join(
-            will_retry.select("url_hash", "canon_url"),
-            ["url_hash", "canon_url"],
-            "left_anti",
-        )
-        .unionByName(blocked.select("url_hash", "canon_url"))
+        pages.select("url_hash", "canon_url")
+        .union(image_eval.where(~F.coalesce(retry, F.lit(False))).select("url_hash", "canon_url"))
+        .union(blocked.select("url_hash", "canon_url"))
         .withColumn("first_round", F.lit(round_id))
-        .persist()  # read by the seen write and the bloom update
     )
-    persisted.append(new_seen)
 
     next_frontier = (
         pending.select(
@@ -853,11 +851,15 @@ def run_round_pipeline(
         .unionByName(retry_frontier)
     )
 
-    # lineage (B13): per-(partition, host) rows from each stage's OWN
-    # aggregation. Collecting them is the pipeline's one action: it
-    # fills every persisted frame above, and the funnel row is their
-    # column sums (per-partition rows sum to the funnel totals — pinned
-    # in tests/test_frontier_order.py), so no stage is counted apart
+    # lineage (B13): per-(partition, host) rows. Each stage projects
+    # its rows to (partition_id, host, per-row counters), taking the
+    # partition id inside its own plan; one aggregate over the union of
+    # those projections sums them, so rows of different stages that
+    # share (partition_id, host) merge. Collecting it is the pipeline's
+    # one action: it fills every persisted frame above, and the funnel
+    # row is its column sums (per-partition rows sum to the funnel
+    # totals — pinned in tests/test_frontier_order.py), so no stage is
+    # counted apart
     counters = (
         "n_candidates",
         "n_bloom_new",
@@ -867,43 +869,34 @@ def run_round_pipeline(
         "n_fetched",
         "n_failed",
     )
+    one = F.lit(1)
 
-    def _stage_rows(df: DataFrame, aggs, host_col: bool = True) -> DataFrame:
-        """Per-(partition, host) rows with the given counter columns
-        aggregated from `df` and the rest zero. `aggs` maps lineage
-        column → aggregate expression."""
-        key = [F.spark_partition_id().alias("partition_id")] + (
-            [F.col("host")] if host_col else [F.lit(None).cast("string").alias("host")]
+    def _stage_rows(df: DataFrame, per_row: dict, host=F.col("host")) -> DataFrame:
+        """`df`'s rows as (partition_id, host, counters): each counter
+        column is `per_row`'s expression for it, or 0."""
+        return df.select(
+            F.spark_partition_id().alias("partition_id"),
+            host.alias("host"),
+            *[per_row.get(c, F.lit(0)).cast("long").alias(c) for c in counters],
         )
-        agg = df.groupBy(*key).agg(
-            *[expr.cast("long").alias(name) for name, expr in aggs.items()]
-        )
-        cols = [F.lit(round_id).alias("round_id"), "partition_id", "host"] + [
-            F.col(c) if c in aggs else F.lit(0).cast("long").alias(c) for c in counters
-        ]
-        return agg.select(*cols)
 
     per_part = (
-        _stage_rows(frontier, {"n_candidates": F.count(F.lit(1))}, host_col=False)
-        .unionByName(
-            _stage_rows(
-                new,
-                {"n_bloom_new": F.count(F.lit(1)), "n_deduped": F.count(F.lit(1))},
-            )
-        )
-        .unionByName(_stage_rows(blocked, {"n_robots_blocked": F.count(F.lit(1))}))
-        .unionByName(_stage_rows(scheduled, {"n_scheduled": F.count(F.lit(1))}))
-        .unionByName(
+        _stage_rows(frontier, {"n_candidates": one}, host=F.lit(None).cast("string"))
+        .union(_stage_rows(new, {"n_bloom_new": one, "n_deduped": one}))
+        .union(_stage_rows(blocked, {"n_robots_blocked": one}))
+        .union(_stage_rows(scheduled, {"n_scheduled": one}))
+        .union(
             _stage_rows(
                 results,
                 {
-                    "n_fetched": F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)),
-                    "n_failed": F.sum(
-                        F.when(~F.col("status").isin("ok", "gated"), 1).otherwise(0)
-                    ),
+                    "n_fetched": F.when(F.col("status") == "ok", 1).otherwise(0),
+                    "n_failed": F.when(~F.col("status").isin("ok", "gated"), 1).otherwise(0),
                 },
             )
         )
+        .groupBy("partition_id", "host")
+        .agg(*[F.sum(c).alias(c) for c in counters])
+        .select(F.lit(round_id).alias("round_id"), "partition_id", "host", *counters)
     )
     part_rows = [tuple(r) for r in per_part.collect()]
     funnel = [sum(r[3 + i] for r in part_rows) for i in range(len(counters))]
