@@ -98,7 +98,7 @@ def test_bloom_broadcast_and_cogroup_paths_agree(spark):
 
 
 def test_incremental_cogroup_update_matches_numpy_build(spark):
-    """The engine's one bloom update (the no-collect cogroup rebuild)
+    """The engine's one bloom update (the no-collect cogroup fold)
     must produce shard blobs bit-identical to ones built directly in
     numpy from the old and new hashes, including untouched
     (pass-through) and brand-new shards."""
@@ -151,7 +151,7 @@ def test_incremental_cogroup_update_matches_numpy_build(spark):
 def test_crawl_engine_distributed_bloom_path_matches_broadcast(spark):
     """Full engine E2E: a crawl forced onto the no-broadcast bloom path
     (bloom_broadcast_max_bytes=0 → cogroup membership + cogroup
-    incremental rebuild) must produce the same crawl schedule, seen set,
+    folds) must produce the same crawl schedule, seen set,
     and results as the default broadcast path."""
     import tempfile
 
@@ -178,65 +178,79 @@ def test_bloom_param_change_rebuilds_state(spark):
     """Resuming a crawl under DIFFERENT bloom layout parameters must
     not reinterpret stored blobs with the new shard routing (which
     would yield false 'definitely unseen' and silent re-crawls): the
-    engine detects the manifest-recorded parameter mismatch, rebuilds
-    the bloom from the authoritative seen table, and the finished
-    crawl still matches the sequential simulator exactly."""
+    engine detects the manifest-recorded parameter mismatch, resets the
+    base to empty (all of the authoritative seen table is the exact
+    delta, folded by the usual rule), and the finished crawl still
+    matches the sequential simulator exactly."""
     import tempfile
-
-    from pyspark.sql import functions as F
 
     from voz_spark.config import CrawlConfig
     from voz_spark.oracle_sim import simulate
     from voz_spark.rounds import CrawlEngine
 
     wd = tempfile.mkdtemp(prefix="bloomparams-")
-    eng = CrawlEngine(spark, wd, n_seeds=5, n_images=150)
+    eng = CrawlEngine(spark, wd, n_seeds=5, n_images=150, cfg=CrawlConfig(**SMALL))
     eng.bootstrap()
     eng.run_round()
     eng.run_round()
+    eng.run_round()
+    assert eng._base_covers(eng.cat.manifest()) > 0  # a base under the old layout
 
-    cfg2 = CrawlConfig(n_bloom_shards=8, bloom_bits_per_shard=1 << 16)
+    cfg2 = CrawlConfig(n_bloom_shards=4, bloom_bits_per_shard=1 << 16)
     eng2 = CrawlEngine(spark, wd, n_seeds=5, n_images=150, cfg=cfg2)
-
-    # the rebuilt state has NO false negatives over the committed seen set
-    blobs = {r.shard_id: r for r in eng2._validated_bloom_table().collect()}
-    assert all(r.nbits == cfg2.bloom_bits_per_shard for r in blobs.values())
-    seen_hashes = [r.url_hash for r in eng2.seen().collect()]
-    assert seen_hashes
-    for h in seen_hashes:
-        sid = int(B.shard_of(np.array([h], dtype=np.int64).astype(np.uint64), cfg2.n_bloom_shards)[0])
-        row = blobs[sid]
-        bits = np.frombuffer(row.bits, dtype=np.uint8)
-        assert B.maybe_contains(
-            bits, np.array([h], dtype=np.int64).astype(np.uint64), row.nbits, row.k
-        )[0]
+    # the old-layout base is not trusted; the filter has NO false
+    # negatives over the committed seen set
+    assert eng2._base_covers(eng2.cat.manifest()) == 0
+    _assert_filter_covers_seen(eng2)
 
     eng2.run()
     sim = simulate(n_seeds=5, n_images=150)
     assert eng2.schedule_order() == sim.schedule
     assert {r.canon_url for r in eng2.seen().collect()} == sim.seen
-    # new manifests record the new layout
-    meta = eng2.cat.manifest()["meta"]
-    assert meta["bloom_n_shards"] == cfg2.n_bloom_shards
+    # new manifests record the new layout and no longer list the
+    # old-layout base
+    man = eng2.cat.manifest()
+    assert man["meta"]["bloom_n_shards"] == cfg2.n_bloom_shards
+    assert man["tables"]["seen_bloom"] == []
+    _assert_filter_covers_seen(eng2)
 
 
-def _assert_no_false_negatives(eng, bloom_df):
-    """Every committed seen URL reads maybe-seen against `bloom_df`."""
-    from pyspark.sql import functions as F
+def _assert_filter_covers_seen(eng) -> int:
+    """No false negatives over the committed seen set: every committed
+    seen hash is in the bloom base the engine trusts (numpy
+    maybe_contains over the committed `seen_bloom` blobs) OR in the
+    exact delta, the seen files after the base's marker. Returns the
+    number of seen files the base covers."""
+    import pandas as pd
 
-    from voz_spark.frontier import _bloom_split_cogroup
-
-    seen = eng.seen().select("url_hash", "canon_url")
-    assert seen.count() > 0
-    memb = _bloom_split_cogroup(seen, bloom_df, eng.cfg)
-    assert memb.where(~F.col("maybe_seen")).count() == 0
+    cfg = eng.cfg
+    man = eng.cat.manifest()
+    seen = man["tables"]["seen"]
+    covers = eng._base_covers(man)
+    hashes = (
+        pd.concat([pd.read_parquet(f, columns=["url_hash"]) for f in seen])["url_hash"]
+        .to_numpy()
+        .astype(np.uint64)
+    )
+    assert len(hashes) > 0
+    maybe = B.in_sorted(eng._delta_hashes(seen[covers:]), hashes)
+    if covers:
+        shards = B.shard_of(hashes, cfg.n_bloom_shards)
+        for f in man["tables"]["seen_bloom"]:
+            for r in pd.read_parquet(f).itertuples():
+                assert (r.nbits, r.k) == (cfg.bloom_bits_per_shard, cfg.bloom_k)
+                bits = np.frombuffer(r.bits, dtype=np.uint8)
+                on = shards == r.shard_id
+                maybe[on] |= B.maybe_contains(bits, hashes[on], r.nbits, r.k)
+    assert maybe.all(), f"{(~maybe).sum()} committed seen hashes read unseen"
+    return covers
 
 
 def test_resume_of_cuckoo_era_catalog_rebuilds_bloom(spark):
     """A catalog last committed by an engine that kept a cuckoo seen
     filter has `seen` rows but an empty `seen_bloom` file set (and
     stale cuckoo state the engine no longer reads). Resuming it must
-    rebuild the bloom from the authoritative seen table — the
+    treat all of the authoritative seen table as the exact delta — the
     lit(False) empty-state path would skip the anti-join backstop —
     and the finished crawl still matches the sequential simulator.
     The resumed rounds drop the cuckoo files from the manifest, so
@@ -266,14 +280,14 @@ def test_resume_of_cuckoo_era_catalog_rebuilds_bloom(spark):
     assert man["tables"]["seen"] and man["tables"]["seen_bloom"] == []
 
     eng2 = CrawlEngine(spark, wd, n_seeds=5, n_images=150)
-    _assert_no_false_negatives(eng2, eng2._validated_bloom_table())
+    assert _assert_filter_covers_seen(eng2) == 0
 
     eng2.run()
     sim = simulate(n_seeds=5, n_images=150)
     assert eng2.schedule_order() == sim.schedule
     assert {r.canon_url for r in eng2.seen().collect()} == sim.seen
+    _assert_filter_covers_seen(eng2)
     man = eng2.cat.manifest()
-    assert man["tables"]["seen_bloom"]
     assert "seen_filter" not in man["meta"]
     # the stale cuckoo state leaves the manifest with the first resumed
     # round, so snapshot expiry makes its files reclaimable
@@ -284,20 +298,23 @@ def test_resume_of_cuckoo_era_catalog_rebuilds_bloom(spark):
 
 def test_engine_reopen_recrawls_urls(spark):
     """Recrawl story end-to-end: reopened URLs leave `seen`, the bloom
-    is rebuilt without them (and without false negatives over what
-    stays), they re-enter the frontier with their original priority
-    fields, and the next run fetches them AGAIN (one extra results row
-    each); every other URL stays crawled-once."""
+    base that holds their bits is dropped (no false negatives over what
+    stays: it is all exact delta), they re-enter the frontier with their
+    original priority fields, and the next run fetches them AGAIN (one
+    extra results row each); every other URL stays crawled-once."""
     import tempfile
     from collections import Counter
 
     from pyspark.sql import functions as F
 
-    from voz_spark import schemas
+    from voz_spark.config import CrawlConfig
     from voz_spark.rounds import CrawlEngine
 
-    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="reopen-"), n_seeds=5, n_images=150)
+    eng = CrawlEngine(
+        spark, tempfile.mkdtemp(prefix="reopen-"), n_seeds=5, n_images=150, cfg=CrawlConfig(**SMALL)
+    )
     eng.run()
+    assert eng._base_covers(eng.cat.manifest()) > 0  # the crawl folded a base
     threads = sorted(
         {r.canon_url for r in eng.results().where(F.col("kind") == "thread").collect()}
     )
@@ -307,7 +324,8 @@ def test_engine_reopen_recrawls_urls(spark):
     assert st["n_reopened"] == len(targets)
     seen_mid = {r.canon_url for r in eng.seen().collect()}
     assert seen_mid == seen_before - set(targets)
-    _assert_no_false_negatives(eng, eng._read("seen_bloom", schemas.SEEN_BLOOM))
+    assert eng.cat.manifest()["tables"]["seen_bloom"] == []  # reopen builds no bloom
+    assert _assert_filter_covers_seen(eng) == 0
 
     eng.run()  # fetches exactly the reopened URLs, then drains
     assert {r.canon_url for r in eng.seen().collect()} == seen_before
@@ -325,8 +343,10 @@ def test_engine_reopen_recrawls_urls(spark):
 # seen files the base does not cover (the manifest marker names them).
 
 # 8 shards x 1024 bits = 1 KiB of state, all of it broadcastable; the
-# delta folds once it exceeds 1024 // DELTA_SHARE bytes (16 rows)
-SMALL = dict(n_bloom_shards=8, bloom_bits_per_shard=1 << 10, bloom_broadcast_max_bytes=1 << 10)
+# delta folds once it exceeds 1024 // DELTA_SHARE bytes (16 rows). In the
+# 5-seed crawl below rounds 3 and 4 fold and round 5 does not.
+SMALL_LAYOUT = dict(n_bloom_shards=8, bloom_bits_per_shard=1 << 10)
+SMALL = dict(**SMALL_LAYOUT, bloom_broadcast_max_bytes=1 << 10)
 
 
 def _numpy_blobs(cfg, hashes):
@@ -398,7 +418,7 @@ def test_base_plus_delta_membership_matches_numpy(spark):
     broadcasts = []
     for got_df in (
         _bloom_split(spark, cand, blobs, cfg, broadcasts=broadcasts, delta=delta),
-        _bloom_split(spark, cand, {}, cfg, bloom_df=bloom_df, broadcasts=broadcasts, delta=delta),
+        _bloom_split(spark, cand, bloom_df, cfg, broadcasts=broadcasts, delta=delta),
     ):
         got = {r["canon_url"]: r["maybe_seen"] for r in got_df.collect()}
         assert got == want
@@ -424,6 +444,7 @@ def test_crawl_that_folds_often_matches_simulator(spark):
 
     import pandas as pd
 
+    from voz_spark import schemas
     from voz_spark.config import CrawlConfig
     from voz_spark.rounds import CrawlEngine, updated_bloom_cogroup
 
@@ -448,8 +469,9 @@ def test_crawl_that_folds_often_matches_simulator(spark):
         r["shard_id"]: bytes(r["bits"])
         for r in updated_bloom_cogroup(spark.createDataFrame(covered), empty, cfg).collect()
     }
-    got = {r.shard_id: bytes(r.bits) for r in eng._validated_bloom_table().collect()}
+    got = {r.shard_id: bytes(r.bits) for r in eng._read("seen_bloom", schemas.SEEN_BLOOM).collect()}
     assert got == want == _numpy_blobs(cfg, covered["url_hash"].to_numpy())
+    assert _assert_filter_covers_seen(eng) == covers
 
 
 def test_resume_after_delta_commit_and_across_a_fold(spark):
@@ -472,7 +494,7 @@ def test_resume_after_delta_commit_and_across_a_fold(spark):
     def engine():
         return CrawlEngine(spark, wd, n_seeds=5, n_images=150, cfg=cfg)
 
-    engine().run(max_rounds=2)
+    engine().run(max_rounds=3)  # round 3 folds rounds 1-2; round 3's rows are the delta
     man = engine().cat.manifest()
     covers = man["meta"]["bloom_base_covers"]
     assert man["tables"]["seen_bloom"] and len(man["tables"]["seen"]) > covers  # a delta
@@ -488,7 +510,7 @@ def test_resume_after_delta_commit_and_across_a_fold(spark):
     eng.cat.commit = commit_unless_fold
     with pytest.raises(RuntimeError, match="inside a fold"):
         eng.run()
-    assert eng.last_round() == 2 and eng.cat.manifest() == man
+    assert eng.last_round() == 3 and eng.cat.manifest() == man
     orphaned = set(eng.cat.orphan_files(min_age_s=0))
     assert any("/seen_bloom/" in f for f in orphaned)  # the fold's unpublished base
 
@@ -498,25 +520,31 @@ def test_resume_after_delta_commit_and_across_a_fold(spark):
     assert not orphaned & eng.cat.referenced_files()
 
 
-def test_compact_seen_forces_bloom_rebuild(spark):
+def test_compact_seen_resets_bloom_base(spark):
     """`compact("seen")` replaces seen's files, so the marker's prefix is
-    gone: the next round rebuilds the base from all of seen (and its
-    marker covers every compacted file), and the crawl still matches."""
+    gone: the base resets to empty (covers 0), all of seen is the delta,
+    the next round folds it into a new base whose marker covers every
+    compacted file, and the crawl still matches."""
     import tempfile
 
     from voz_spark import schemas
+    from voz_spark.config import CrawlConfig
     from voz_spark.rounds import CrawlEngine
 
-    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomcompact-"), n_seeds=5, n_images=150)
+    eng = CrawlEngine(
+        spark, tempfile.mkdtemp(prefix="bloomcompact-"), n_seeds=5, n_images=150,
+        cfg=CrawlConfig(**SMALL),
+    )
     eng.run(max_rounds=3)
     man = eng.cat.manifest()
-    assert eng._base_covers(man) is not None
+    assert eng._base_covers(man) > 0
     # a rewrite into as many files as before still breaks the marker
     renamed = [f"{f}.rewritten" for f in man["tables"]["seen"]]
-    assert eng._base_covers({**man, "tables": {**man["tables"], "seen": renamed}}) is None
+    assert eng._base_covers({**man, "tables": {**man["tables"], "seen": renamed}}) == 0
     eng.cat.compact(spark, "seen", schemas.SEEN, target_files=2)
     compacted = eng.cat.manifest()["tables"]["seen"]
-    assert eng._base_covers(eng.cat.manifest()) is None
+    assert eng._base_covers(eng.cat.manifest()) == 0
+    _assert_filter_covers_seen(eng)
     v = eng.cat.latest_version()
     eng.run()
     _assert_matches_simulator(eng)
@@ -526,21 +554,36 @@ def test_compact_seen_forces_bloom_rebuild(spark):
     assert man["meta"]["bloom_base_last"] == compacted[-1]
 
 
+def _engine_on_a_base(spark, prefix):
+    """An engine whose committed base exists and whose next round will
+    not fold: rounds 1-2 run at a zero budget (round 2 folds round 1's
+    rows), then the crawl resumes under the default budget. The budget
+    is not part of the base's layout, so the resumed engine keeps the
+    base; its 64 MiB budget folds no delta of this crawl."""
+    import tempfile
+
+    from voz_spark.config import CrawlConfig
+    from voz_spark.rounds import CrawlEngine
+
+    wd = tempfile.mkdtemp(prefix=prefix)
+    folding = CrawlConfig(**SMALL_LAYOUT, bloom_broadcast_max_bytes=0)
+    CrawlEngine(spark, wd, n_seeds=5, n_images=150, cfg=folding).run(max_rounds=2)
+    eng = CrawlEngine(spark, wd, n_seeds=5, n_images=150, cfg=CrawlConfig(**SMALL_LAYOUT))
+    assert eng.last_round() == 2 and eng._base_covers(eng.cat.manifest()) > 0
+    return eng
+
+
 def test_outside_seen_append_is_caught_by_delta(spark):
     """Rows appended to `seen` by another writer after the base exists
     stay covered: the base marker is still valid, the appended file is
     part of the delta, and none of its URLs is scheduled — though the
     simulator, which never saw the append, schedules them that round."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from voz_spark.canon import url_key
     from voz_spark.oracle_sim import simulate
-    from voz_spark.rounds import CrawlEngine
 
-    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomappend-"), n_seeds=5, n_images=150)
-    eng.run(max_rounds=2)
+    eng = _engine_on_a_base(spark, "bloomappend-")
     cat = eng.cat
     assert cat.manifest()["tables"]["seen_bloom"]  # the base exists
     nxt = eng.last_round() + 1
@@ -552,8 +595,8 @@ def test_outside_seen_append_is_caught_by_delta(spark):
     appended = cat.write_files(rows, "seen")
     cat.commit(appends={"seen": appended}, meta=cat.manifest()["meta"])
     man = cat.manifest()
-    covers = eng._base_covers(man)
-    assert covers is not None and set(appended) <= set(man["tables"]["seen"][covers:])
+    covers = _assert_filter_covers_seen(eng)
+    assert covers > 0 and set(appended) <= set(man["tables"]["seen"][covers:])
 
     eng.run_round()
     assert cat.manifest()["tables"]["seen_bloom"] == man["tables"]["seen_bloom"]  # no fold
@@ -565,12 +608,7 @@ def test_non_fold_round_writes_no_bloom(spark):
     """Once the base exists, a round whose delta stays small writes no
     `seen_bloom` file and leaves the manifest's `seen_bloom` list as it
     was; lineage and checkpoint rows are written from the driver."""
-    import tempfile
-
-    from voz_spark.rounds import CrawlEngine
-
-    eng = CrawlEngine(spark, tempfile.mkdtemp(prefix="bloomnofold-"), n_seeds=5, n_images=150)
-    eng.run(max_rounds=2)
+    eng = _engine_on_a_base(spark, "bloomnofold-")
     cat = eng.cat
     bloom_before = cat.manifest()["tables"]["seen_bloom"]
     assert bloom_before

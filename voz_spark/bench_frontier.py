@@ -112,7 +112,7 @@ def _bench_round(spark: SparkSession, n_urls: int, parts: int, cfg: CrawlConfig)
     try:
         n_seen = seen.count()
         empty = spark.createDataFrame([], schemas.SEEN_BLOOM)
-        shard_blobs = {
+        base = {
             int(r.shard_id): bytes(r.bits)
             for r in updated_bloom_cogroup(seen, empty, cfg).collect()
         }
@@ -123,7 +123,7 @@ def _bench_round(spark: SparkSession, n_urls: int, parts: int, cfg: CrawlConfig)
 
         def schedule(budgets: dict[str, int]):
             return schedule_stage(
-                spark, frontier, seen_anti, shard_blobs, robots_rules(), budgets,
+                spark, frontier, seen_anti, base, robots_rules(), budgets,
                 cfg, persisted, broadcasts,
             )[1]
 

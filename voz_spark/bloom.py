@@ -18,16 +18,18 @@ The engine's seen filter is a bloom BASE of these blobs OR an exact
 DELTA: the sorted url_hash values (8 B/row) of the seen rows committed
 since the base was last written (``in_sorted``). The base is rewritten
 only when the delta is folded into it (rounds.CrawlEngine: when the
-delta outgrows its share of cfg.bloom_broadcast_max_bytes, or when a
-replaced seen table forces a rebuild), so a round's filter upkeep is
-O(new rows), not O(state) — the per-window segments merged in bulk of
-segmented sliding-window filters (PAPERS.md).
+delta outgrows its share of cfg.bloom_broadcast_max_bytes), so a
+round's filter upkeep is O(new rows), not O(state) — the per-window
+segments merged in bulk of segmented sliding-window filters
+(PAPERS.md). A base that a replaced seen table or a changed layout
+makes untrustworthy is dropped, not rebuilt: the filter starts again
+from an empty base, with all of seen as the delta, like a new segment.
 
 This is the engine's only URL-seen filter. A cuckoo filter (deletable,
 lower FPR) tied it on membership probes but made crawl rounds ~33%
 slower in a same-box A/B, all in its per-round state update; the one
-consumer of deletion, ``CrawlEngine.reopen``, rebuilds the affected
-bloom from ``seen`` instead.
+consumer of deletion, ``CrawlEngine.reopen``, resets the base to
+empty instead.
 
 Correctness contract (SURVEY §5.2 item 4): NO false negatives ever —
 rows neither the base nor the delta may contain skip the exact

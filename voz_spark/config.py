@@ -60,8 +60,10 @@ class CrawlConfig:
     # only viable strategy at the 10^10 design point's ~64 GiB state.
     # It also bounds the filter's exact delta (always broadcast, 8 B per
     # seen row not yet in the bloom base): once the delta would exceed
-    # 1/rounds.DELTA_SHARE of this, a round folds it into the base. At 0
-    # every round folds (and membership always cogroups).
+    # 1/rounds.DELTA_SHARE of this, a round folds it into the base. A
+    # base the engine cannot trust counts as empty (all of seen is the
+    # delta) and is folded by the same rule. At 0 every round with seen
+    # rows folds (and membership always cogroups).
     bloom_broadcast_max_bytes: int = 64 << 20
 
     def __post_init__(self) -> None:

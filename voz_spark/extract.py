@@ -139,7 +139,11 @@ def detect_keywords(
     Plan shape: posts × broadcast(keyword dim) — O(n·k) but exact,
     matching the reference's per-keyword finditer loop
     (src/data_analyzer.py:244-274); the find-all runs vectorized per
-    Arrow batch. Context window [-ctx_before, +ctx_after] chars.
+    Arrow batch. A JVM `contains` prefilter keeps only the (post,
+    keyword) pairs whose text holds the keyword as a literal substring,
+    which every word-bounded match of the keyword needs, so Python sees
+    candidates only (null text fails it, as it yields no mention).
+    Context window [-ctx_before, +ctx_after] chars.
     """
     keywords = keywords or COMPONENT_KEYWORDS
     spark = df.sparkSession
@@ -163,7 +167,11 @@ def detect_keywords(
             out.append(hits)
         return pd.Series(out)
 
-    crossed = df.select("post_id", text_col).crossJoin(kw)
+    crossed = (
+        df.select("post_id", text_col)
+        .crossJoin(kw)
+        .where(F.col(text_col).contains(F.col("keyword")))
+    )
     return (
         crossed.withColumn("mentions", find_all(F.col(text_col), F.col("keyword")))
         .where(F.size("mentions") > 0)

@@ -85,7 +85,6 @@ class RoundResult:
     n_scheduled: int
     n_fetched_ok: int
     n_failed: int
-    scheduled_df: DataFrame | None = None
     results_df: DataFrame | None = None
     new_seen_df: DataFrame | None = None
     next_frontier_df: DataFrame | None = None
@@ -279,36 +278,29 @@ def _bloom_split_cogroup(
 def _bloom_split(
     spark: SparkSession,
     df: DataFrame,
-    shard_blobs: dict[int, bytes],
+    base: dict[int, bytes] | DataFrame,
     cfg: CrawlConfig,
-    bloom_df: DataFrame | None = None,
     broadcasts: list[Broadcast] | None = None,
     delta: np.ndarray | None = None,
 ) -> DataFrame:
     """B3a: add `maybe_seen`. False → definitely unseen (skips the
-    anti-join). The seen filter is a bloom base (the blobs) OR an
-    exact `delta`: the sorted uint64 hashes of the seen rows the base
-    does not cover yet (rounds.CrawlEngine folds it in when it grows).
-    Two physical strategies for the base, same semantics:
+    anti-join). The seen filter is a bloom `base` OR an exact `delta`:
+    the sorted uint64 hashes of the seen rows the base does not cover
+    yet (rounds.CrawlEngine folds it in when it grows). The caller picks
+    the base's form, and with it the physical strategy (same semantics):
 
-    - small state (sandbox / early crawl): shard blobs broadcast once,
-      membership tested in a scalar pandas UDF — no extra shuffle;
-    - state beyond cfg.bloom_broadcast_max_bytes (the 10^10 path):
-      shard-aligned cogroup against the bloom table, no broadcast
-      (`_bloom_split_cogroup`). Callers can also force it by passing
-      `bloom_df` with shard_blobs=None.
+    - a dict of shard blobs (sandbox / early crawl): broadcast once,
+      membership tested in a scalar pandas UDF — no extra shuffle; an
+      empty dict with an empty delta is the free lit(False) path;
+    - a DataFrame of the bloom table (state beyond
+      cfg.bloom_broadcast_max_bytes, the 10^10 path): shard-aligned
+      cogroup, no broadcast of the base (`_bloom_split_cogroup`).
 
     The delta always travels as a broadcast. A broadcast made here is
     appended to `broadcasts`, for the caller to destroy once the plan
     has run.
     """
     delta = np.empty(0, dtype=np.uint64) if delta is None else delta
-    cogroup = bloom_df is not None and (
-        not shard_blobs
-        or sum(len(b) for b in shard_blobs.values()) > cfg.bloom_broadcast_max_bytes
-    )
-    if not cogroup and not shard_blobs and not len(delta):
-        return df.withColumn("maybe_seen", F.lit(False))
 
     def broadcast(value) -> Broadcast:
         bc = spark.sparkContext.broadcast(value)
@@ -316,11 +308,13 @@ def _bloom_split(
             broadcasts.append(bc)
         return bc
 
-    if cogroup:
+    if isinstance(base, DataFrame):
         return _bloom_split_cogroup(
-            df, bloom_df, cfg, delta=broadcast(delta) if len(delta) else None
+            df, base, cfg, delta=broadcast(delta) if len(delta) else None
         )
-    bc = broadcast((shard_blobs, delta))
+    if not base and not len(delta):
+        return df.withColumn("maybe_seen", F.lit(False))
+    bc = broadcast((base, delta))
     nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
 
     @pandas_udf("boolean")
@@ -604,13 +598,12 @@ def schedule_stage(
     spark: SparkSession,
     frontier: DataFrame,
     seen: DataFrame,
-    shard_blobs: dict[int, bytes],
+    base: dict[int, bytes] | DataFrame,
     robots_rules: list[dict],
     budgets: dict[str, int],
     cfg: CrawlConfig,
     persisted: list[DataFrame],
     broadcasts: list[Broadcast],
-    bloom_df: DataFrame | None = None,
     delta: np.ndarray | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The round's scheduling chain: canonicalize → in-batch dedup →
@@ -621,20 +614,20 @@ def schedule_stage(
     Returns `(new, sched_all)`: `new` holds the unseen candidates with
     their `robots_blocked` flag (packed `_pri`, plus `host`/`path`);
     `sched_all` holds the robots-allowed ones with the `scheduled`
-    flag. Membership is the bloom prefilter (`_bloom_split`: broadcast
-    `shard_blobs`, or a shard-aligned cogroup against `bloom_df`, OR
-    the exact sorted `delta` hashes); its contract is no false negatives, and maybe_seen rows pass the exact
-    anti-join backstop. Nothing runs here. The persisted frames (cand,
-    new, stage 1, sched_all) are appended to `persisted` and any
-    membership broadcast to `broadcasts`; the caller releases both
-    once its plan has run (RoundResult.unpersist)."""
+    flag. Membership is the bloom prefilter (`_bloom_split`: the `base`
+    blobs broadcast, or a base DataFrame cogrouped shard-aligned, OR the
+    exact sorted `delta` hashes); its contract is no false negatives,
+    and maybe_seen rows pass the exact anti-join backstop. Nothing runs
+    here. The persisted frames (cand, new, stage 1, sched_all) are
+    appended to `persisted` and any membership broadcast to
+    `broadcasts`; the caller releases both once its plan has run
+    (RoundResult.unpersist)."""
     cand = _host_path(_dedup_in_batch(_canonicalize(frontier)))
     # persist before the membership fork: both the definitely-new branch
     # and the anti-join branch read this, and without a persist each
     # branch would re-run the canonicalization + dedup + membership UDF
     cand = _bloom_split(
-        spark, cand, shard_blobs, cfg, bloom_df=bloom_df, broadcasts=broadcasts,
-        delta=delta,
+        spark, cand, base, cfg, broadcasts=broadcasts, delta=delta
     ).persist()
     persisted.append(cand)
     new = _dedup_against_seen(cand, seen)
@@ -661,14 +654,13 @@ def run_round_pipeline(
     spark: SparkSession,
     frontier: DataFrame,
     seen: DataFrame,
-    shard_blobs: dict[int, bytes],
+    base: dict[int, bytes] | DataFrame,
     images: DataFrame,
     robots_rules: list[dict],
     budgets: dict[str, int],
     cfg: CrawlConfig,
     round_id: int,
     img_space: int,
-    bloom_df: DataFrame | None = None,
     delta: np.ndarray | None = None,
 ) -> RoundResult:
     """Execute one crawl round: `schedule_stage`, then fetch/validate
@@ -680,8 +672,8 @@ def run_round_pipeline(
     broadcasts: list[Broadcast] = []
 
     new, sched_all = schedule_stage(
-        spark, frontier, seen, shard_blobs, robots_rules, budgets, cfg,
-        persisted, broadcasts, bloom_df=bloom_df, delta=delta,
+        spark, frontier, seen, base, robots_rules, budgets, cfg,
+        persisted, broadcasts, delta=delta,
     )
     blocked = _unpack_pri(new.where(F.col("robots_blocked")))
     scheduled = sched_all.where(F.col("scheduled"))
@@ -912,7 +904,6 @@ def run_round_pipeline(
         n_scheduled=n_scheduled,
         n_fetched_ok=n_fetched_ok,
         n_failed=n_failed,
-        scheduled_df=scheduled,
         results_df=results,
         new_seen_df=new_seen,
         next_frontier_df=next_frontier,

@@ -17,20 +17,23 @@ reads with pyarrow. A base is only ever published in the same commit
 as a marker naming files that commit already lists, so a crash can
 never produce a filter that claims URLs the seen table lacks, and no
 committed seen row can be missing from base ∪ delta (no false
-negatives). A marker that no longer names the head of `seen` (a
-`reopen` or `compact` replaced it, a catalog predating the marker, a
-changed bloom layout) rebuilds the base from all of `seen`.
+negatives). A base the engine cannot trust (a changed bloom layout, a
+marker that no longer names the head of `seen` after a `reopen` or
+`compact`, a catalog predating the marker) counts as empty: it covers
+0 files, all of `seen` is the delta, and the round drops the stale
+base from the manifest.
 
-One bloom update path: a fold. `updated_bloom_cogroup` cogroups the
+One bloom writer: the fold. `updated_bloom_cogroup` cogroups the
 delta's hashes with the stored blob rows per shard (untouched shards
-pass through) and the new base is written in that round's commit. A
-round folds before its membership probe, and only when the delta's
-8 B/row would exceed 1/DELTA_SHARE of cfg.bloom_broadcast_max_bytes
-(or the base must be rebuilt); every other round writes no bloom
-state. At bloom_broadcast_max_bytes=0 every round folds. The delta
-always travels as a sorted uint64 broadcast; the base is broadcast
-(read with pyarrow, cached by its file list) while the full state fits
-cfg.bloom_broadcast_max_bytes, and is cogrouped shard-aligned beyond.
+pass through; an empty base builds from scratch) and the new base is
+written in that round's commit. A round folds before its membership
+probe, and only when the delta's 8 B/row would exceed 1/DELTA_SHARE of
+cfg.bloom_broadcast_max_bytes; every other round writes no bloom
+state. At bloom_broadcast_max_bytes=0 every round with seen rows
+folds. The delta always travels as a sorted uint64 broadcast; the base
+is broadcast (read with pyarrow, cached by its file list) while the
+full state fits cfg.bloom_broadcast_max_bytes, and is cogrouped
+shard-aligned beyond (`CrawlEngine.run_round` picks the form).
 
 Where a round's counts come from: the funnel (n_candidates … n_failed)
 is the column sums of the lineage rows the pipeline collects once
@@ -92,17 +95,17 @@ def generate_images(spark: SparkSession, path: str, n_images: int) -> None:
 def updated_bloom_cogroup(
     new_seen: DataFrame, bloom_df: DataFrame, cfg: CrawlConfig
 ) -> DataFrame:
-    """Incremental bloom shard rebuild with NO driver collect and NO
+    """Incremental bloom shard update with NO driver collect and NO
     broadcast — the 10^10 path (state is ~64 GiB there; neither a
     driver collect of the blobs nor a broadcast is possible). New
     hashes and existing blob rows cogroup per shard; Spark's cogroup
     has full-outer semantics, so shards that received no new hashes
     appear as blob-only groups and pass through unchanged, and
-    brand-new shards appear as hash-only groups and build from empty.
-    With an empty `bloom_df` this is the full build from `seen`. The
-    engine calls it only to fold the seen filter's delta into the base
-    (CrawlEngine._seen_filter) and to rebuild. Bit-equivalence with
-    blobs built directly in numpy is pinned in tests/test_bloom.py."""
+    brand-new shards appear as hash-only groups and build from empty,
+    so an empty `bloom_df` builds the whole base. The engine's one
+    caller is the fold of the seen filter's delta into its base
+    (CrawlEngine._seen_filter). Bit-equivalence with blobs built
+    directly in numpy is pinned in tests/test_bloom.py."""
     nbits, k, n_shards = cfg.bloom_bits_per_shard, cfg.bloom_k, cfg.n_bloom_shards
 
     def update(hashes_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -258,12 +261,13 @@ class CrawlEngine:
             "bloom_base_last": seen_files[covers - 1] if covers else None,
         }
 
-    def _base_covers(self, man: dict) -> int | None:
+    def _base_covers(self, man: dict) -> int:
         """How many leading committed `seen` files the committed bloom
-        base covers, or None when the base cannot be trusted: the layout
-        parameters differ from the config, the marker is missing, or its
-        prefix is no longer the head of `seen` (a `reopen` or `compact`
-        replaced the files, or a catalog had `seen` but no base)."""
+        base covers; 0 (an empty base) when there is no base or it
+        cannot be trusted: the layout parameters differ from the config,
+        the marker is missing, or its prefix is no longer the head of
+        `seen` (a `reopen` or `compact` replaced the files, or a catalog
+        had `seen` but no base)."""
         meta, tables = man["meta"], man["tables"]
         seen = tables.get("seen", [])
         cfg = self.cfg
@@ -272,30 +276,15 @@ class CrawlEngine:
             meta.get("bloom_bits_per_shard"),
             meta.get("bloom_k"),
         )
-        if stored != (cfg.n_bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_k):
-            return None
-        if not seen:
-            return 0
         n = meta.get("bloom_base_covers")
-        if not tables.get("seen_bloom") or not isinstance(n, int) or not 1 <= n <= len(seen):
-            return None
-        return n if seen[n - 1] == meta.get("bloom_base_last") else None
-
-    def _validated_bloom_table(self) -> DataFrame:
-        """The committed bloom base if `_base_covers` vouches for it,
-        else the base REBUILT from all of `seen`: the distributed cogroup
-        path over the authoritative seen table — never an interpretation
-        of stored blobs under mismatched shard routing."""
-        if self._base_covers(self.cat.manifest()) is not None:
-            return self._read("seen_bloom", schemas.SEEN_BLOOM)
-        return self._rebuilt_bloom()
-
-    def _rebuilt_bloom(self, seen: DataFrame | None = None) -> DataFrame:
-        """Bloom state built from scratch over `seen` (default: the
-        committed seen table)."""
-        seen = self.seen() if seen is None else seen
-        empty = self.spark.createDataFrame([], schemas.SEEN_BLOOM)
-        return updated_bloom_cogroup(seen.select("url_hash"), empty, self.cfg)
+        if (
+            stored != (cfg.n_bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_k)
+            or not tables.get("seen_bloom")
+            or not isinstance(n, int)
+            or not 1 <= n <= len(seen)
+        ):
+            return 0
+        return n if seen[n - 1] == meta.get("bloom_base_last") else 0
 
     def _file_rows(self, files: list[str]) -> int:
         """Rows in committed parquet files, from their footers (cached
@@ -338,28 +327,26 @@ class CrawlEngine:
 
     def _seen_filter(self, man: dict) -> tuple[list[str], int]:
         """The round's bloom base files and how many leading `seen`
-        files they cover. Folds first — writes a new base with
+        files they cover: the committed base (none when `_base_covers`
+        is 0). Folds first — writes a new base with
         `updated_bloom_cogroup`, uncommitted until the round's commit —
-        when the committed base cannot be trusted (a rebuild: a fold of
-        all of `seen` into an empty base) or when the delta's 8 B/row
-        would exceed 1/DELTA_SHARE of cfg.bloom_broadcast_max_bytes."""
-        tables = man["tables"]
-        seen_files = tables.get("seen", [])
+        when the delta's 8 B/row would exceed 1/DELTA_SHARE of
+        cfg.bloom_broadcast_max_bytes."""
+        seen_files = man["tables"].get("seen", [])
         covers = self._base_covers(man)
-        if covers is None:
-            if not seen_files:
-                return [], 0
-            base = self._rebuilt_bloom()
-        elif self._file_rows(seen_files[covers:]) * 8 > (
+        base = man["tables"]["seen_bloom"] if covers else []
+        if self._file_rows(seen_files[covers:]) * 8 <= (
             self.cfg.bloom_broadcast_max_bytes // DELTA_SHARE
         ):
-            delta = self.spark.read.schema(schemas.SEEN).parquet(*seen_files[covers:])
-            base = updated_bloom_cogroup(
-                delta.select("url_hash"), self._read("seen_bloom", schemas.SEEN_BLOOM), self.cfg
-            )
-        else:
-            return tables.get("seen_bloom", []), covers
-        return self.cat.write_files(base, "seen_bloom"), len(seen_files)
+            return base, covers
+        delta = self.spark.read.schema(schemas.SEEN).parquet(*seen_files[covers:])
+        base_df = (
+            self.spark.read.schema(schemas.SEEN_BLOOM).parquet(*base)
+            if base
+            else self.spark.createDataFrame([], schemas.SEEN_BLOOM)
+        )
+        folded = updated_bloom_cogroup(delta.select("url_hash"), base_df, self.cfg)
+        return self.cat.write_files(folded, "seen_bloom"), len(seen_files)
 
     # -- the round -------------------------------------------------------------------
 
@@ -372,30 +359,26 @@ class CrawlEngine:
         seen_files = tables.get("seen", [])
         bloom_files, covers = self._seen_filter(man)
         delta = self._delta_hashes(seen_files[covers:])
+        # the one broadcast-vs-cogroup choice for the base; no base and
+        # no delta (round 1 of every crawl) takes the free lit(False)
+        # membership path
         if self._bloom_state_is_broadcastable():
-            blobs = self._base_blobs(bloom_files) if bloom_files else {}
-            bloom_df = None
+            base = self._base_blobs(bloom_files)
+        elif bloom_files:
+            base = self.spark.read.schema(schemas.SEEN_BLOOM).parquet(*bloom_files)
         else:
-            blobs = {}
-            bloom_df = (
-                self.spark.read.schema(schemas.SEEN_BLOOM).parquet(*bloom_files)
-                if bloom_files
-                else None
-            )
+            base = {}
         rr = run_round_pipeline(
             self.spark,
             frontier,
             self.seen_idx.sync(self.cat),
-            blobs,
+            base,
             images,
             self.robots,
             self.budgets,
             self.cfg,
             round_id,
             self.img_space,
-            # no base and no delta (round 1 of every crawl) takes the
-            # free lit(False) membership path
-            bloom_df=bloom_df,
             delta=delta,
         )
 
@@ -421,7 +404,7 @@ class CrawlEngine:
             ),
         }
         if bloom_files != tables.get("seen_bloom", []):
-            replaces["seen_bloom"] = bloom_files  # this round folded
+            replaces["seen_bloom"] = bloom_files  # a fold, or a stale base dropped
         if tables.get("seen_cuckoo"):
             # state of the retired cuckoo filter: drop it from the
             # manifest so snapshot expiry can reclaim its files
@@ -457,18 +440,20 @@ class CrawlEngine:
     def reopen(self, urls: DataFrame) -> dict:
         """Make already-crawled URLs crawlable again (recrawl of a
         stale host, cache expiry, deletion requests): remove them from
-        `seen`, rebuild the bloom from the remaining seen rows, and
-        re-enter them into the frontier with their ORIGINAL priority
-        fields so the next round fetches them in the right order.
+        `seen`, reset the bloom base to empty, and re-enter them into
+        the frontier with their ORIGINAL priority fields so the next
+        round fetches them in the right order.
 
         Reference analogue: deleting a thread's cache file makes the
         thread crawlable again on the next run
         (src/thread_crawler.py:46-59).
 
-        A bloom cannot unset bits, so the filter is rebuilt (one
-        distributed cogroup pass over `seen`); reopen is an operator
-        action, not per-round traffic, so the engine keeps no
-        deletable filter for it.
+        A bloom cannot unset bits, so the commit drops the base (marker
+        covers 0): every remaining seen row is the exact delta, and the
+        next round folds it into a new base only if it outgrows its
+        share of cfg.bloom_broadcast_max_bytes. reopen is an operator
+        action, not per-round traffic, so the engine keeps no deletable
+        filter for it.
 
         ``urls``: a DataFrame with a ``canon_url`` column. Returns the
         number of URLs actually reopened.
@@ -504,15 +489,9 @@ class CrawlEngine:
             replaces={
                 "seen": seen_files,
                 "frontier": self.cat.write_files(next_frontier, "frontier"),
-                "seen_bloom": self.cat.write_files(
-                    self._rebuilt_bloom(remaining), "seen_bloom"
-                ),
+                "seen_bloom": [],
             },
-            # the rebuilt base covers every remaining seen file
-            meta={
-                "round_id": self.last_round(),
-                **self._bloom_meta(seen_files, len(seen_files)),
-            },
+            meta={"round_id": self.last_round(), **self._bloom_meta(seen_files, 0)},
         )
         urls.unpersist()
         removed.unpersist()
